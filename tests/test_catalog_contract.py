@@ -48,3 +48,21 @@ def test_declared_schemas_match_disk(spark, sf_dir):
     """Every catalog table at every sf dir matches the declared schema."""
     problems = Catalog(spark, sf_dir).validate_schemas()
     assert problems == []
+
+
+def test_schema_drift_raises_on_every_access(spark, tmp_path, monkeypatch):
+    """A drifted table must fail loudly on EVERY access, not only the
+    first: the once-per-process check may remember a table only after
+    its comparison passed, else the second access silently reads the
+    renamed column as NULLs through the declared schema."""
+    import duckdb
+
+    monkeypatch.delenv("SPARK_GRAFT_SKIP_SCHEMA_VALIDATION", raising=False)
+    duckdb.execute(
+        "COPY (SELECT r_regionkey, r_name AS r_title "
+        "FROM read_parquet('/root/testdata/sf0.001/region.parquet')) "
+        f"TO '{tmp_path}/region.parquet' (FORMAT PARQUET)"
+    )
+    for _ in range(2):
+        with pytest.raises(ValueError, match="schema drift"):
+            Catalog(spark, str(tmp_path)).region

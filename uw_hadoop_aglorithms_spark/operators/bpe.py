@@ -380,29 +380,25 @@ def bpe_suite_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against the oracle's relational replay — not just pytest parity.
     # Round 12: the two encoders are independent given (top_words,
     # merges) and each runs a string of tiny jobs, so they materialize
-    # CONCURRENTLY (the pagerank_suite trick; measured 6.9 → 6.1 s for
+    # CONCURRENTLY (suites._run_members; measured 6.9 → 6.1 s for
     # the suite at sf0.1, interleaved n=4 minima, rows identical).
     # Neither encoder scopes session conf, so there is no planning
     # hazard (contrast pack_sequences' ws/bpe legs).
-    from concurrent.futures import ThreadPoolExecutor
+    # suites imports this module, so its fan-out is imported here
+    from uw_hadoop_aglorithms_spark.operators.suites import _run_members
 
-    with ThreadPoolExecutor(2) as pool:
-        # shared_frame (round 13): same eager materialization, plus the
-        # env-gated DISK_ONLY_2 mode for cluster fault tolerance
-        f_enc = pool.submit(
-            lambda: shared_frame(
-                _enc_rows(encode_words(top_words, merges), "bpe_encode")
+    # shared_frame (round 13): same eager materialization, plus the
+    # env-gated DISK_ONLY_2 mode for cluster fault tolerance
+    enc, enc_bc = _run_members({
+        "bpe_encode": lambda: shared_frame(
+            _enc_rows(encode_words(top_words, merges), "bpe_encode")
+        ),
+        "bpe_encode_bcast": lambda: shared_frame(
+            _enc_rows(
+                encode_words_broadcast(top_words, merges), "bpe_encode_bcast"
             )
-        )
-        f_bc = pool.submit(
-            lambda: shared_frame(
-                _enc_rows(
-                    encode_words_broadcast(top_words, merges),
-                    "bpe_encode_bcast",
-                )
-            )
-        )
-        enc, enc_bc = f_enc.result(), f_bc.result()
+        ),
+    }).values()
     return mdf.unionAll(vocab).unionAll(enc).unionAll(enc_bc)
 
 

@@ -12,14 +12,18 @@ driver row instead of four.
 Each suite's members remain independently importable and independently
 pytest-tested; this module only composes them for the driver contract.
 
-Scale note: a suite runs its members sequentially in one job each — it
-changes verification bookkeeping, not physical plans. Per-member plan
-properties (pushdown, broadcast, partial agg) are unchanged.
+Scale note: a suite changes verification bookkeeping, not physical
+plans. Per-member plan properties (pushdown, broadcast, partial agg) are
+unchanged; suites whose members are independent jobs submit them
+concurrently through `_run_members`.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from functools import partial
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,6 +67,28 @@ def _u(*parts: str) -> str:
 def _wrap(variant: str, sql: str, projection: str = "*", tag: str = "variant") -> str:
     """Tag an existing oracle's rows with a variant discriminator."""
     return f"SELECT '{variant}' AS {tag}, {projection} FROM (\n{sql}\n)"
+
+
+T = TypeVar("T")
+
+
+def _run_members(members: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run each member thunk on its own driver thread and return the
+    results keyed and ordered as given.
+
+    The one fan-out for suite members: a member's jobs are a string of
+    small AQE stages, so running independent members side by side fills
+    the scheduler idle time one member leaves between its stages. Every
+    member runs to completion before the first failure (in member order)
+    is re-raised, so per-member cleanup always finishes. Members collect
+    or checkpoint their own results; this helper never touches data."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    if not members:
+        return {}
+    with ThreadPoolExecutor(len(members)) as pool:
+        futs = {name: pool.submit(fn) for name, fn in members.items()}
+    return {name: f.result() for name, f in futs.items()}
 
 
 # --------------------------------------------------------------------------
@@ -404,8 +430,6 @@ def spam(spark: SparkSession, sf_dir: str) -> DataFrame:
     per held-out doc for three of them — into Python lists and
     re-wrapped with createDataFrame, a driver footprint that grew with
     the corpus (the exact shape doc_profile was cured of in round 5)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     # ONE tokenize+polyhash corpus scan serves all four members (the
     # pagerank_suite prebuilt pattern): materialize the cache before the
     # threads so they don't race to fill it
@@ -416,14 +440,12 @@ def spam(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fn(spark, sf_dir, inst).localCheckpoint(eager=True)
 
     try:
-        with ThreadPoolExecutor(4) as pool:
-            f_train = pool.submit(mat, ml.spam_train)
-            f_apply = pool.submit(mat, ml.spam_apply)
-            f_ens = pool.submit(mat, ml.spam_ensemble)
-            f_gd = pool.submit(mat, ml.spam_batch_gd)
-            train, applied, ens, gd = (
-                f.result() for f in (f_train, f_apply, f_ens, f_gd)
-            )
+        train, applied, ens, gd = _run_members({
+            "train": partial(mat, ml.spam_train),
+            "apply": partial(mat, ml.spam_apply),
+            "ens": partial(mat, ml.spam_ensemble),
+            "gd": partial(mat, ml.spam_batch_gd),
+        }).values()
     finally:
         inst.unpersist()
 
@@ -498,8 +520,6 @@ def pagerank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     values on a perf-only knob otherwise — the restore back to the
     session value happens here, after both threads join.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Window
 
     from uw_hadoop_aglorithms_spark.operators import graph
@@ -512,10 +532,10 @@ def pagerank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     prebuilt = (vertices, edges)
 
     with graph._loop_shuffle_partitions(spark, n_edges * 3):
-        with ThreadPoolExecutor(2) as pool:
-            f_ppr = pool.submit(graph.ppr_top20, spark, sf_dir, prebuilt)
-            f_pr = pool.submit(graph.pagerank_top20, spark, sf_dir, prebuilt)
-            ppr_df, pr_df = f_ppr.result(), f_pr.result()
+        ppr_df, pr_df = _run_members({
+            "ppr": partial(graph.ppr_top20, spark, sf_dir, prebuilt),
+            "global": partial(graph.pagerank_top20, spark, sf_dir, prebuilt),
+        }).values()
 
     ppr = ppr_df.select(
         F.lit("ppr").alias("variant"), "source", "id", "rank", "pos"
@@ -539,10 +559,9 @@ def pagerank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four window shapes collected CONCURRENTLY (pagerank_suite
-    trick; ~0.8 s → ~0.4 s at sf0.1). Window counts are bounded by the
+    """All four window shapes collected CONCURRENTLY (_run_members;
+    ~0.8 s → ~0.4 s at sf0.1). Window counts are bounded by the
     time range, not input volume, so the re-wrap is bookkeeping."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def grab(fn, tag_col):
         return [
@@ -550,19 +569,13 @@ def window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in fn(spark, sf_dir).collect()
         ]
 
-    specs = (
-        ("tumbling", stream_windows.event_count, None),
-        ("sliding", stream_windows.sliding_event_count, None),
-        ("region", stream_windows.region_event_count, "event_type"),
-        ("geo", stream_windows.geo_region_count, "region"),
-    )
-    with ThreadPoolExecutor(4) as pool:
-        futs = {v: pool.submit(grab, fn, tc) for v, fn, tc in specs}
-        rows = [
-            (v, w, t, c)
-            for v, _, _ in specs
-            for (w, t, c) in futs[v].result()
-        ]
+    got = _run_members({
+        "tumbling": partial(grab, stream_windows.event_count, None),
+        "sliding": partial(grab, stream_windows.sliding_event_count, None),
+        "region": partial(grab, stream_windows.region_event_count, "event_type"),
+        "geo": partial(grab, stream_windows.geo_region_count, "region"),
+    })
+    rows = [(v, w, t, c) for v, vrows in got.items() for (w, t, c) in vrows]
     return spark.createDataFrame(
         rows, "variant string, window_start timestamp_ntz, tag string, cnt long"
     )
@@ -586,6 +599,16 @@ def window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: replay copy is immutable input, so re-preparing it per call only
 #: churned /tmp; atexit removes them when the process ends).
 _SBE_REPLAY: dict[str, str] = {}
+
+#: Shuffle partitions of the stateful streams (round 12, was 4). The
+#: state exchange carries per-window PARTIAL aggregates (map-side
+#: combine), so its row count is bounded by the open-window/key
+#: cardinality, not input volume — measured 17.1 s -> 14.5 s at sf0.1
+#: (interleaved n=4 minima) from 3 fewer state-store tasks per
+#: micro-batch across 8 concurrent streams. On a real cluster the state
+#: is sized by the window count, not input rows, so a small fixed
+#: partition count is the right shape there too.
+STREAM_PARTITIONS = 1
 
 
 def _cached_replay_dir(tag: str, sf_dir: str, prepare) -> str:
@@ -651,11 +674,10 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-one per-batch watermark sequence in closed form, drops rows
     older than it, and emits only windows the final watermark closed —
     batch counts minus the dropped events.
-    All streams run CONCURRENTLY from driver threads (independent
-    sinks/checkpoints)."""
+    All streams run CONCURRENTLY from driver threads (_run_streams:
+    independent sinks/checkpoints)."""
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from uw_hadoop_aglorithms_spark.streaming import runner
 
@@ -665,33 +687,35 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events_late", sf_dir,
         lambda d: runner.prepare_events_late_replay_dir(spark, sf_dir, d),
     )
-    ckpt = tempfile.mkdtemp(prefix="sbe_ckpt_")
-    ck_se = tempfile.mkdtemp(prefix="sbe_ck_se_")
-    ck_rj = tempfile.mkdtemp(prefix="sbe_ck_rj_")
-    ck_lt = tempfile.mkdtemp(prefix="sbe_ck_lt_")
-    ck_sw = tempfile.mkdtemp(prefix="sbe_ck_sw_")
-    ck_rg = tempfile.mkdtemp(prefix="sbe_ck_rg_")
-    # The stateful agg repartitions to spark.sql.shuffle.partitions in
-    # EVERY micro-batch; the state (one row per event-time window) is
-    # tiny, so scope the conf down for the run — a fresh checkpoint pins
-    # the state layout per call, so this never conflicts across runs. On
-    # a real cluster the state is sized by the window count, not input
-    # rows, so a small fixed partition count is the right shape there too.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # Default 1 (round 12, was 4): the state exchange carries per-window
-    # PARTIAL aggregates (map-side combine), so its row count is bounded
-    # by the open-window/key cardinality, not input volume — measured
-    # 17.1 s -> 14.5 s at sf0.1 (interleaved n=4 minima) from 3 fewer
-    # state-store tasks per micro-batch across 8 concurrent streams.
-    # Parameterized for deployments whose key cardinality is genuinely
-    # wide (e.g. per-user sessions over a large user space).
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "1"),
-    )
-    def grab_sessions():
+
+    def grab_window(ck, view):
+        out = runner.stream_event_count(spark, replay, ck, query_name=view)
+        return [
+            ("window", r.window_start, None, None, int(r.cnt))
+            for r in out.collect()
+        ]
+
+    def grab_swin(ck, view):
+        out = runner.stream_sliding_event_count(
+            spark, replay, ck, query_name=view
+        )
+        return [
+            ("swin", r.window_start, None, None, int(r.cnt))
+            for r in out.collect()
+        ]
+
+    def grab_region(ck, view):
+        out = runner.stream_region_event_count(
+            spark, replay, ck, query_name=view
+        )
+        return [
+            ("region", r.window_start, None, r.event_type, int(r.cnt))
+            for r in out.collect()
+        ]
+
+    def grab_sessions(ck, view):
         out = runner.stream_user_sessions(
-            spark, replay_t, ck_se, query_name="sbe_sessions_mem"
+            spark, replay_t, ck, query_name=view
         ).select(
             "user_id",
             "session_start",
@@ -708,37 +732,8 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in out.collect()
         ]
 
-    def grab_swin():
-        out = runner.stream_sliding_event_count(
-            spark, replay, ck_sw, query_name="sbe_swin_mem"
-        )
-        return [
-            ("swin", r.window_start, None, None, int(r.cnt))
-            for r in out.collect()
-        ]
-
-    def grab_region():
-        out = runner.stream_region_event_count(
-            spark, replay, ck_rg, query_name="sbe_region_mem"
-        )
-        return [
-            ("region", r.window_start, None, r.event_type, int(r.cnt))
-            for r in out.collect()
-        ]
-
-    def grab_late():
-        out = runner.stream_event_count_append(
-            spark, replay_l, ck_lt, query_name="sbe_late_mem"
-        )
-        return [
-            ("late", r.window_start, None, None, int(r.cnt))
-            for r in out.collect()
-        ]
-
-    def grab_rjoin():
-        out = runner.stream_range_join(
-            spark, replay_t, ck_rj, query_name="sbe_rjoin_mem"
-        )
+    def grab_rjoin(ck, view):
+        out = runner.stream_range_join(spark, replay_t, ck, query_name=view)
         return [
             (
                 "rjoin", None, int(r.purchase_id),
@@ -747,53 +742,39 @@ def stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in out.collect()
         ]
 
+    def grab_late(ck, view):
+        out = runner.stream_event_count_append(
+            spark, replay_l, ck, query_name=view
+        )
+        return [
+            ("late", r.window_start, None, None, int(r.cnt))
+            for r in out.collect()
+        ]
+
+    # per-call scratch (bench runs this REPS times): one checkpoint
+    # subdirectory per member under a single root
+    scratch = tempfile.mkdtemp(prefix="sbe_")
+    # The stateful agg repartitions to spark.sql.shuffle.partitions in
+    # EVERY micro-batch; the state (one row per event-time window) is
+    # tiny, so scope the conf down for the run — a fresh checkpoint pins
+    # the state layout per call, so this never conflicts across runs.
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_PARTITIONS))
     try:
-        with ThreadPoolExecutor(6) as pool:
-            f_ing = pool.submit(_ingest_collect, spark, sf_dir)
-            f_se = pool.submit(grab_sessions)
-            f_rj = pool.submit(grab_rjoin)
-            f_lt = pool.submit(grab_late)
-            f_sw = pool.submit(grab_swin)
-            f_rg = pool.submit(grab_region)
-            out = runner.stream_event_count(
-                spark, replay, ckpt, query_name="stream_batch_equiv_mem"
-            )
-            win = [
-                ("window", r.window_start, None, None, int(r.cnt))
-                for r in out.collect()
-            ]
-            dd, dc = f_ing.result()
-            se, rj, lt = f_se.result(), f_rj.result(), f_lt.result()
-            sw, rg = f_sw.result(), f_rg.result()
+        # member order is the stitch order below
+        got = _run_streams(spark, scratch, "sbe", {
+            "window": grab_window,
+            "swin": grab_swin,
+            "region": grab_region,
+            "ingest": lambda ck, _view: _ingest_collect(spark, sf_dir, ck),
+            "sessions": grab_sessions,
+            "rjoin": grab_rjoin,
+            "late": grab_late,
+        })
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the memory sinks register temp views and the checkpoints are
-        # per-call scratch — bench runs this REPS times, so neither may
-        # accumulate
-        for v in (
-            "stream_batch_equiv_mem", "sbe_sessions_mem", "sbe_rjoin_mem",
-            "sbe_late_mem", "sbe_swin_mem", "sbe_region_mem",
-        ):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(ck_se, ignore_errors=True)
-        shutil.rmtree(ck_rj, ignore_errors=True)
-        shutil.rmtree(ck_lt, ignore_errors=True)
-        shutil.rmtree(ck_sw, ignore_errors=True)
-        shutil.rmtree(ck_rg, ignore_errors=True)
-    rows = (
-        win
-        + sw
-        + rg
-        + [("dedup", None, d, dg, None) for d, dg in dd]
-        + [("decon", ws, d, None, n) for d, ws, n in dc]
-        + se
-        + rj
-        + lt
-    )
+        shutil.rmtree(scratch, ignore_errors=True)
+    rows = [r for member_rows in got.values() for r in member_rows]
     # timestamp_ntz: the streamed walls round-trip collect/createDataFrame
     # without session- or process-zone interpretation (render.walls_out)
     return spark.createDataFrame(
@@ -814,12 +795,12 @@ def _ingest_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _ingest_collect(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
+def _ingest_collect(spark: SparkSession, sf_dir: str, scratch: str) -> list:
     """The streaming front door under the oracle contract (round 5):
     both ingestion-time operators run as REAL AvailableNow streams over
     the deterministic document replay (one doc per minute, 8 block
     files = 8 micro-batches); returns their collected emitted sets
-    (dedup_rows, decon_rows) for the stream_batch_equiv suite.
+    (dedup rows, then decon rows) for the stream_batch_equiv suite.
 
     'dedup' — stream_exact_dedup's ADMITTED set: digest rows surviving
     dropDuplicatesWithinWatermark. The oracle replays the micro-batch
@@ -840,40 +821,55 @@ def _ingest_collect(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
 
     Both memory-sink results are collected and re-wrapped (a memory
     sink is driver state by construction, and the admitted set IS the
-    result contract). Caller owns the shuffle-partition scoping."""
-    import shutil
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
+    result contract) as stream_batch_equiv rows. Caller owns the
+    shuffle-partition scoping and the `scratch` checkpoint root."""
     from uw_hadoop_aglorithms_spark.streaming import runner
 
     replay = _ingest_replay_dir(spark, sf_dir)
-    ck_dd = tempfile.mkdtemp(prefix="ingest_ck_dd_")
-    ck_dc = tempfile.mkdtemp(prefix="ingest_ck_dc_")
+
+    def grab_dedup(ck, view):
+        out = runner.stream_exact_dedup(spark, replay, ck, view)
+        return [
+            ("dedup", None, int(r.doc_id), r.digest, None)
+            for r in out.collect()
+        ]
+
+    def grab_decon(ck, view):
+        out = runner.stream_decontaminate(spark, replay, ck, sf_dir, view)
+        return [
+            ("decon", r.window_start, int(r.doc_id), None,
+             int(r.n_shared_ngrams))
+            for r in out.collect()
+        ]
+
+    got = _run_streams(
+        spark, scratch, "ingest", {"dedup": grab_dedup, "decon": grab_decon}
+    )
+    return got["dedup"] + got["decon"]
+
+
+def _run_streams(
+    spark: SparkSession,
+    scratch: str,
+    prefix: str,
+    streams: dict[str, Callable[[str, str], list]],
+) -> dict[str, list]:
+    """_run_members for memory-sink stream members: member `name` is
+    called with its checkpoint dir `scratch/name` and its sink view
+    `{prefix}_{name}_mem`. The views are dropped afterwards — bench runs
+    the suites REPS times, so they must not accumulate."""
+
+    def view(name: str) -> str:
+        return f"{prefix}_{name}_mem"
+
     try:
-        with ThreadPoolExecutor(2) as pool:
-            f_dd = pool.submit(
-                runner.stream_exact_dedup, spark, replay, ck_dd,
-                "ingest_dedup_mem",
-            )
-            f_dc = pool.submit(
-                runner.stream_decontaminate, spark, replay, ck_dc, sf_dir,
-                "ingest_decon_mem",
-            )
-            dd = [(int(r.doc_id), r.digest) for r in f_dd.result().collect()]
-            dc = [
-                (int(r.doc_id), r.window_start, int(r.n_shared_ngrams))
-                for r in f_dc.result().collect()
-            ]
+        return _run_members({
+            name: partial(fn, os.path.join(scratch, name), view(name))
+            for name, fn in streams.items()
+        })
     finally:
-        for v in ("ingest_dedup_mem", "ingest_decon_mem"):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
-        shutil.rmtree(ck_dd, ignore_errors=True)
-        shutil.rmtree(ck_dc, ignore_errors=True)
-    return dd, dc
+        for name in streams:
+            spark.catalog.dropTempView(view(name))
 
 
 # --------------------------------------------------------------------------
@@ -898,7 +894,7 @@ def decontaminate_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The eight near-dup detectors run CONCURRENTLY from driver threads
-    (the pagerank_suite trick): each member is an independent fused-scan
+    (_run_members): each member is an independent fused-scan
     DAG that deliberately shares no cached state (dedup._gram_hash_sets
     note), and a UNION of the members executes its AQE stages
     sequentially enough that ~38% of the suite's wall-clock is scheduler
@@ -908,11 +904,10 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup rate), so collecting and re-wrapping them is verification
     bookkeeping, not a scale constraint — each member stays individually
     lazy for pipeline use."""
-    from concurrent.futures import ThreadPoolExecutor
 
-    def grab(fn, a, b, s, cast=float):
+    def grab(fn, a, b, s):
         rows = fn(spark, sf_dir).collect()
-        return [(int(r[a]), int(r[b]), cast(r[s])) for r in rows]
+        return [(int(r[a]), int(r[b]), float(r[s])) for r in rows]
 
     def grab_incr():
         # the lake-maintenance form under the oracle contract (round 5):
@@ -948,30 +943,24 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in rows
         ]
 
-    with ThreadPoolExecutor(8) as pool:
-        futs = {
-            "ngram": pool.submit(grab, dedup.ngram_jaccard_pairs, "doc_a", "doc_b", "jaccard"),
-            "minhash": pool.submit(grab, dedup.minhash_lsh_dedup, "doc_a", "doc_b", "jaccard"),
-            "simhash": pool.submit(grab, dedup.simhash_dedup, "doc_a", "doc_b", "hamming"),
-            "cosine": pool.submit(grab, dedup.embedding_cosine_dups, "vec_a", "vec_b", "cosine"),
-            "winnow": pool.submit(grab, dedup.winnow_dup_pairs, "doc_a", "doc_b", "n_shared"),
-            "semantic": pool.submit(grab, dedup.semantic_dedup_pairs, "vec_a", "vec_b", "cosine"),
-            # round 5: the K-scales-with-corpus SemDeDup form (DataFrame
-            # codebook join, no literal centroids)…
-            "sem_scaled": pool.submit(
-                grab, dedup.semantic_dedup_pairs_scaled, "vec_a", "vec_b", "cosine"
-            ),
-            # …and the persisted-band-index incremental form
-            "incr": pool.submit(grab_incr),
-        }
-        rows = [
-            (algo, a, b, s)
-            for algo in (
-                "ngram", "minhash", "simhash", "cosine", "winnow",
-                "semantic", "sem_scaled", "incr",
-            )
-            for (a, b, s) in futs[algo].result()
-        ]
+    got = _run_members({
+        "ngram": partial(grab, dedup.ngram_jaccard_pairs, "doc_a", "doc_b", "jaccard"),
+        "minhash": partial(grab, dedup.minhash_lsh_dedup, "doc_a", "doc_b", "jaccard"),
+        "simhash": partial(grab, dedup.simhash_dedup, "doc_a", "doc_b", "hamming"),
+        "cosine": partial(grab, dedup.embedding_cosine_dups, "vec_a", "vec_b", "cosine"),
+        "winnow": partial(grab, dedup.winnow_dup_pairs, "doc_a", "doc_b", "n_shared"),
+        "semantic": partial(grab, dedup.semantic_dedup_pairs, "vec_a", "vec_b", "cosine"),
+        # round 5: the K-scales-with-corpus SemDeDup form (DataFrame
+        # codebook join, no literal centroids)…
+        "sem_scaled": partial(
+            grab, dedup.semantic_dedup_pairs_scaled, "vec_a", "vec_b", "cosine"
+        ),
+        # …and the persisted-band-index incremental form
+        "incr": grab_incr,
+    })
+    rows = [
+        (algo, a, b, s) for algo, pairs in got.items() for (a, b, s) in pairs
+    ]
     return spark.createDataFrame(
         rows, "algo string, id_a long, id_b long, score double"
     )
@@ -984,17 +973,13 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The seven ANN members (brute/LSH/IVF/PQ, the two persisted-index
     lifecycles, and round-6's filtered IVF) run CONCURRENTLY from driver
-    threads (the pagerank_suite trick; measured ~3.5 s → ~2.0 s at
-    sf0.1 when it was three members). Top-k lists are bounded output
-    (|queries| × k), so the collect/re-wrap is verification
-    bookkeeping; the members stay individually lazy."""
-    from concurrent.futures import ThreadPoolExecutor
+    threads (_run_members; measured ~3.5 s → ~2.0 s at sf0.1 when it
+    was three members). Top-k lists are bounded output (|queries| × k),
+    so the collect/re-wrap is verification bookkeeping; the members
+    stay individually lazy."""
 
     def grab(fn):
-        return [
-            (int(r.query_id), int(r.neighbor_id), float(r.cosine), int(r.rank))
-            for r in fn(spark, sf_dir).collect()
-        ]
+        return fn(spark, sf_dir).collect()
 
     def grab_idx():
         # round 6: the PERSISTED-index form under the oracle contract —
@@ -1022,15 +1007,11 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             similarity.extend_ann_index(
                 spark, emb.filter(F.col("vec_id") > split), prefix
             )
-            rows = similarity.ann_index_topk(spark, sf_dir, prefix).collect()
+            return similarity.ann_index_topk(spark, sf_dir, prefix).collect()
         finally:
             for t in (f"{prefix}_cells", f"{prefix}_centroids",
                       f"{prefix}_cells_tombstones", f"{prefix}_cells__gen"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
-        return [
-            (int(r.query_id), int(r.neighbor_id), float(r.cosine), int(r.rank))
-            for r in rows
-        ]
 
     def grab_ivfpq():
         # round 6: IVF-ADC from PERSISTED CODES — the production
@@ -1046,39 +1027,32 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix = f"ann_pq_{os.getpid()}_{threading.get_ident()}"
         try:
             similarity.save_pq_index(spark, sf_dir, prefix)
-            rows = similarity.ann_ivfpq_topk(spark, sf_dir, prefix).collect()
+            return similarity.ann_ivfpq_topk(spark, sf_dir, prefix).collect()
         finally:
             for t in (f"{prefix}_pqcodes", f"{prefix}_centroids",
                       f"{prefix}_pqcb"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
-        return [
-            (int(r.query_id), int(r.neighbor_id), float(r.cosine), int(r.rank))
-            for r in rows
-        ]
 
-    with ThreadPoolExecutor(7) as pool:
-        futs = {
-            "brute": pool.submit(grab, similarity.ann_brute_topk),
-            "lsh": pool.submit(grab, similarity.ann_lsh_topk),
-            "ivf": pool.submit(grab, similarity.ann_ivf_topk),
-            # round 5: PQ-ADC — the compressed-domain scoring leg
-            "pq": pool.submit(grab, similarity.ann_pq_topk),
-            # round 6: persisted-IVF index after a full mutation lifecycle
-            "ivf_idx": pool.submit(grab_idx),
-            # round 6: IVF-ADC over persisted compressed codes
-            "ivfpq": pool.submit(grab_ivfpq),
-            # round 6: filtered search — the metadata-predicate + vector
-            # ask, PRE-filter strategy (label composed into the
-            # candidate join, not applied after top-k)
-            "filtered": pool.submit(grab, similarity.ann_ivf_filtered_topk),
-        }
-        rows = [
-            (m, q, nb, c, rk)
-            for m in (
-                "brute", "lsh", "ivf", "pq", "ivf_idx", "ivfpq", "filtered",
-            )
-            for (q, nb, c, rk) in futs[m].result()
-        ]
+    got = _run_members({
+        "brute": partial(grab, similarity.ann_brute_topk),
+        "lsh": partial(grab, similarity.ann_lsh_topk),
+        "ivf": partial(grab, similarity.ann_ivf_topk),
+        # round 5: PQ-ADC — the compressed-domain scoring leg
+        "pq": partial(grab, similarity.ann_pq_topk),
+        # round 6: persisted-IVF index after a full mutation lifecycle
+        "ivf_idx": grab_idx,
+        # round 6: IVF-ADC over persisted compressed codes
+        "ivfpq": grab_ivfpq,
+        # round 6: filtered search — the metadata-predicate + vector
+        # ask, PRE-filter strategy (label composed into the
+        # candidate join, not applied after top-k)
+        "filtered": partial(grab, similarity.ann_ivf_filtered_topk),
+    })
+    rows = [
+        (m, int(r.query_id), int(r.neighbor_id), float(r.cosine), int(r.rank))
+        for m, member_rows in got.items()
+        for r in member_rows
+    ]
     return spark.createDataFrame(
         rows,
         "method string, query_id long, neighbor_id long, cosine double, rank int",
@@ -1094,8 +1068,8 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seven per-doc profiles computed CONCURRENTLY (each thread eagerly
-    localCheckpoints its member — seven simultaneous jobs, the
-    pagerank_suite trick) then stitched IN-PLAN with doc_id equi-joins.
+    localCheckpoints its member — seven simultaneous jobs through
+    _run_members) then stitched IN-PLAN with doc_id equi-joins.
     Nothing corpus-sized ever reaches the driver: the round-4 form
     collected the members and dict-stitched them driver-side,
     making this the one registered plan whose driver footprint grew
@@ -1107,22 +1081,19 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup.span_dedup — duplicated-range stats + cleaned-text hash) and
     the Gopher/MassiveWeb rule gate (textstats.gopher_rules); both cover
     every doc, so their joins are inner."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def mat(fn):
         return fn(spark, sf_dir).localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(7) as pool:
-        f_ds = pool.submit(mat, textstats.doc_stats)
-        f_qs = pool.submit(mat, textstats.quality_score)
-        f_rep = pool.submit(mat, textstats.repetition_score)
-        f_li = pool.submit(mat, textstats.lang_id)
-        f_lm = pool.submit(mat, textstats.lm_score)
-        f_sd = pool.submit(mat, dedup.span_dedup)
-        f_gr = pool.submit(mat, textstats.gopher_rules)
-        ds, qs, rep, li, lm, sd, gr = (
-            f.result() for f in (f_ds, f_qs, f_rep, f_li, f_lm, f_sd, f_gr)
-        )
+    ds, qs, rep, li, lm, sd, gr = _run_members({
+        "doc_stats": partial(mat, textstats.doc_stats),
+        "quality": partial(mat, textstats.quality_score),
+        "repetition": partial(mat, textstats.repetition_score),
+        "lang_id": partial(mat, textstats.lang_id),
+        "lm": partial(mat, textstats.lm_score),
+        "span_dedup": partial(mat, dedup.span_dedup),
+        "gopher": partial(mat, textstats.gopher_rules),
+    }).values()
 
     return (
         ds.join(qs, "doc_id")

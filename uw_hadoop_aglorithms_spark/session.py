@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 #: AQE coalescing floor. Round 12 shipped a GLOBAL 64k floor (small
 #: shuffles otherwise coalesce to one post-shuffle partition,
 #: serializing CPU-heavy post-shuffle stages); round 13's cold-JVM
@@ -30,9 +30,7 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 #: own queries via `dedup_tuned_session` below.
 DEFAULT_AQE_MIN_PARTITION = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m")
 #: The dedup-scoped floor (see dedup_tuned_session).
-DEDUP_AQE_MIN_PARTITION = os.environ.get(
-    "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE_DEDUP", "64k"
-)
+DEDUP_AQE_MIN_PARTITION = "64k"
 #: local-mode JVM heap: in local[*] the "executors" live inside the driver
 #: JVM, so the default 1g heap GC-thrashes under cached state + 32 task
 #: threads. On a real cluster the launcher sizes executors instead.

@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from uw_hadoop_aglorithms_spark.sources.schemas import TABLE_SCHEMAS
 
@@ -33,6 +34,15 @@ TABLE_NAMES = tuple(TABLE_SCHEMAS)
 #: (for deployments that control their data dir and want zero footer
 #: reads).
 _VALIDATED: set[tuple[str, str]] = set()
+
+
+def _schema_drift(actual: StructType, declared: StructType) -> str | None:
+    """None if names and types agree field-for-field, in order
+    (nullability is not enforced: Parquet marks all testdata columns
+    nullable); otherwise a 'disk=… declared=…' description."""
+    got = [(f.name, f.dataType.simpleString()) for f in actual.fields]
+    want = [(f.name, f.dataType.simpleString()) for f in declared.fields]
+    return None if got == want else f"disk={got} declared={want}"
 
 
 class Catalog:
@@ -88,26 +98,22 @@ class Catalog:
         (dir, table)): one inference read of the footer, compared
         field-for-field against the declared schema the actual read
         applies. Same comparison as validate_schemas(), which remains
-        the all-tables sweeper for tests."""
+        the all-tables sweeper for tests. Only a passing check is
+        remembered, so a drifted table raises on every access."""
         key = (self.sf_dir, name)
         if key in _VALIDATED or os.environ.get(
             "SPARK_GRAFT_SKIP_SCHEMA_VALIDATION"
         ):
             return
-        _VALIDATED.add(key)
         actual = self.spark.read.parquet(
             f"{self.sf_dir}/{name}.parquet"
         ).schema
-        got = [(f.name, f.dataType.simpleString()) for f in actual.fields]
-        want = [
-            (f.name, f.dataType.simpleString())
-            for f in TABLE_SCHEMAS[name].fields
-        ]
-        if got != want:
+        drift = _schema_drift(actual, TABLE_SCHEMAS[name])
+        if drift:
             raise ValueError(
-                f"schema drift in {self.sf_dir}/{name}.parquet: "
-                f"disk={got} declared={want}"
+                f"schema drift in {self.sf_dir}/{name}.parquet: {drift}"
             )
+        _VALIDATED.add(key)
 
     def _load_events(self) -> DataFrame:
         """Normalize `events.ts` to TIMESTAMP_NTZ — the stored NAIVE
@@ -172,9 +178,7 @@ class Catalog:
     def validate_schemas(self) -> list[str]:
         """Compare on-disk schemas against the declared ones; return drift.
 
-        Empty list == everything matches. Names and types must agree
-        field-for-field (nullability is not enforced: Parquet marks all
-        testdata columns nullable).
+        Empty list == everything matches (_schema_drift comparison).
         """
         problems: list[str] = []
         for name, expected in TABLE_SCHEMAS.items():
@@ -188,10 +192,9 @@ class Catalog:
                     f"{self.sf_dir}/{name}.parquet"
                 ).schema
             )
-            got = [(f.name, f.dataType.simpleString()) for f in actual.fields]
-            want = [(f.name, f.dataType.simpleString()) for f in expected.fields]
-            if got != want:
-                problems.append(f"{name}: disk={got} declared={want}")
+            drift = _schema_drift(actual, expected)
+            if drift:
+                problems.append(f"{name}: {drift}")
         return problems
 
 
