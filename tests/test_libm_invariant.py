@@ -16,6 +16,10 @@ grep-able invariant that keeps them out:
   lookup, intlog's LOG2E/EXP2 constants — computed once in the driver
   process and embedded in BOTH engine sides, hence version-portable by
   construction);
+- no package ``**`` (or ``**=``) takes a non-integer-constant exponent
+  outside the same allowlist: a float power is libm ``pow`` — ``x ** 0.5``
+  disagrees with the correctly rounded ``math.sqrt`` on ~1 in 1200
+  doubles on glibc 2.36, while the oracles take roots with ``sqrt``;
 - no non-docstring string constant in the package (Spark ``F.expr``/
   ``selectExpr`` fragments included) embeds a transcendental SQL call.
 
@@ -128,6 +132,17 @@ MATH_ALLOW = {
 MATH_EXACT = {"floor", "ceil", "ldexp", "frexp", "sqrt", "fabs", "trunc", "isnan", "isinf", "inf", "nan", "pi", "e", "copysign", "fsum"}
 
 
+def _int_const(node: ast.AST) -> bool:
+    """An integer literal, optionally signed (``2``, ``-1``)."""
+    if isinstance(node, ast.UnaryOp) and isinstance(node.op, (ast.USub, ast.UAdd)):
+        node = node.operand
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, int)
+        and not isinstance(node.value, bool)
+    )
+
+
 def _scope_of(tree: ast.Module, node: ast.AST) -> str:
     """Name of the innermost function/class containing node (line-based)."""
     best, name = None, "<module>"
@@ -174,6 +189,15 @@ def test_no_libm_in_package_source(path):
                 if attr in BANNED or attr == "pow":
                     if (rel, _scope_of(tree, node)) not in MATH_ALLOW:
                         bad.append(f"{rel}:{node.lineno} {base}.{attr}")
+        # x ** y / x **= y with a non-integer exponent: libm pow
+        if isinstance(node, (ast.BinOp, ast.AugAssign)) and isinstance(
+            node.op, ast.Pow
+        ):
+            exp = node.right if isinstance(node, ast.BinOp) else node.value
+            if not _int_const(exp) and (
+                (rel, _scope_of(tree, node)) not in MATH_ALLOW
+            ):
+                bad.append(f"{rel}:{node.lineno} ** {ast.unparse(exp)}")
         # SQL fragments headed for F.expr/selectExpr (and oracle text
         # assembled in source): scan non-docstring string constants
         if (

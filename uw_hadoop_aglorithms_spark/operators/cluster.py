@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from uw_hadoop_aglorithms_spark.functions import folds
+from uw_hadoop_aglorithms_spark.operators.similarity import _vec_matrix
 from uw_hadoop_aglorithms_spark.plans.layout import spread_for_cpu
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 from uw_hadoop_aglorithms_spark.functions.rounding import fround
@@ -47,12 +49,7 @@ KM_ROUND = 6
 def _sqdist(vec: Column, cent: list[float]) -> Column:
     """Squared euclidean distance to a literal centroid — sequential
     zip+fold, the same order DuckDB's list_reduce folds."""
-    lit = F.array(*[F.lit(x) for x in cent])
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return folds.sqdist_col(vec, F.array(*[F.lit(x) for x in cent]))
 
 
 def _assign(vec: Column, cents: list[list[float]]) -> Column:
@@ -72,14 +69,13 @@ def _assign_frame(vecs: DataFrame, cents: list[list[float]]) -> DataFrame:
     Arrow-batched numpy kernel (round 12). The K×D literal-centroid
     fold chains are interpreted per element in Catalyst AND recompile
     per iteration (the codebook literals change every round); the
-    kernel accumulates (x−c)² with an EXPLICIT per-dimension loop —
-    ``acc = acc + d*d`` elementwise — so every (row, centroid) distance
-    is the identical left-to-right IEEE fold, and ``np.argmin`` takes
-    the first minimum = the lower cid, matching the struct-min
-    tie-break. Measured kmeans_clusters 3.69 → 2.46 s at sf0.1
-    (interleaved n=4 minima), rows identical; pinned against the
-    Catalyst form in tests/test_cluster.py. Map-side, partitioning
-    preserved — the 100 TB shape is unchanged."""
+    kernel takes every (row, centroid) distance from
+    ``functions/folds.sqdists`` — the identical left-to-right IEEE fold
+    of (x−c)² — and ``np.argmin`` takes the first minimum = the lower
+    cid, matching the struct-min tie-break. Measured kmeans_clusters
+    3.69 → 2.46 s at sf0.1 (interleaved n=4 minima), rows identical;
+    pinned against the Catalyst form in tests/test_cluster.py. Map-side,
+    partitioning preserved — the 100 TB shape is unchanged."""
     clist = [list(c) for c in cents]
 
     def fn(batches):
@@ -87,7 +83,7 @@ def _assign_frame(vecs: DataFrame, cents: list[list[float]]) -> DataFrame:
         import pandas as pd
 
         cs = np.asarray(clist, dtype=np.float64)  # K × D
-        k, d = cs.shape
+        d = cs.shape[1]
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -95,9 +91,7 @@ def _assign_frame(vecs: DataFrame, cents: list[list[float]]) -> DataFrame:
                     {"vec_id": [], "v": [], "cid": [], "dist": []}
                 )
                 continue
-            vm = np.asarray(
-                [list(x) for x in pdf["v"]], dtype=np.float64
-            ).reshape(n, -1)
+            vm = _vec_matrix(pdf)
             # ragged or off-dim rows would need the Catalyst fold; the
             # embeddings contract is fixed KM_DIM — an explicit raise
             # (not an assert, which `python -O` strips) so a drifted
@@ -107,10 +101,7 @@ def _assign_frame(vecs: DataFrame, cents: list[list[float]]) -> DataFrame:
                 raise ValueError(
                     f"vector dim {vm.shape[1]} != centroid dim {d}"
                 )
-            acc = np.zeros((n, k))
-            for j in range(d):
-                diff = vm[:, j][:, None] - cs[None, :, j]
-                acc = acc + diff * diff
+            acc = folds.sqdists(vm, cs)
             cid = np.argmin(acc, axis=1)
             yield pd.DataFrame(
                 {
@@ -190,9 +181,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _lloyd(vecs, _init_centroids(spark, sf_dir))
 
     final = _assign_frame(vecs, cents).select("vec_id", "cid", "dist")
-    norms = {
-        cid: _norm_fold(c) for cid, c in enumerate(cents)
-    }
+    norms = {cid: folds.norm(c) for cid, c in enumerate(cents)}
     norm_col = F.lit(None).cast("double")
     for cid in range(KM_K - 1, -1, -1):
         norm_col = F.when(F.col("cluster_id") == cid, F.lit(norms[cid])).otherwise(
@@ -207,15 +196,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("centroid_norm", F.round(norm_col, 9))
         .orderBy("cluster_id")
     )
-
-
-def _norm_fold(cent: list[float]) -> float:
-    """Left-to-right Python fold — IEEE-identical to both engines'
-    sequential list folds over the same (rounded) components."""
-    acc = 0.0
-    for x in cent:
-        acc = acc + x * x
-    return acc ** 0.5
 
 
 # --- generated DuckDB oracle -------------------------------------------------

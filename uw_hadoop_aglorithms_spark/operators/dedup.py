@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from uw_hadoop_aglorithms_spark.functions import folds
 from uw_hadoop_aglorithms_spark.functions.hashing import P, bucket, polyhash, uhash
 from uw_hadoop_aglorithms_spark.functions.text import tokens
 from uw_hadoop_aglorithms_spark.plans.layout import shared_frame, spread_for_cpu
@@ -1199,23 +1200,10 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
-        .withColumn(
-            "norm",
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("v"), lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-        )
+        .withColumn("norm", F.sqrt(folds.sumsq_col(F.col("v"))))
     )
     a, b = emb.alias("a"), emb.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = folds.dot_col(F.col("a.v"), F.col("b.v"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
@@ -1339,23 +1327,13 @@ def semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cid, c in enumerate(cents)
     ]
     probes = F.slice(F.array_sort(F.array(*entries)), 1, SEM_PROBES)
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("v"), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    norm = F.sqrt(folds.sumsq_col(F.col("v")))
     assigned = emb.select(
         "vec_id", "v", norm.alias("norm"),
         F.explode(probes.getField("cid")).alias("cid"),
     )
     a, b = assigned.alias("a"), assigned.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = folds.dot_col(F.col("a.v"), F.col("b.v"))
     return (
         a.join(
             b,
@@ -1420,11 +1398,7 @@ def semantic_dedup_pairs_scaled(
             F.col("embedding").cast("array<double>").alias("cv"),
         )
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = folds.sqdist_col(F.col("v"), F.col("cv"))
     from pyspark.sql import Window
 
     w = Window.partitionBy("vec_id").orderBy("dist", "cb_id")
@@ -1434,22 +1408,12 @@ def semantic_dedup_pairs_scaled(
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= probes)
     )
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("v"), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    norm = F.sqrt(folds.sumsq_col(F.col("v")))
     assigned = assigned.select(
         "vec_id", "v", norm.alias("norm"), F.col("cb_id").alias("cid")
     )
     a, b = assigned.alias("a"), assigned.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = folds.dot_col(F.col("a.v"), F.col("b.v"))
     return (
         a.join(
             b,

@@ -29,9 +29,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from uw_hadoop_aglorithms_spark.functions import folds
 from uw_hadoop_aglorithms_spark.functions.hashing import P, hash_params
 from uw_hadoop_aglorithms_spark.plans.layout import shared_frame, spread_for_cpu
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
+from uw_hadoop_aglorithms_spark.sources.sinks import drop_managed_table
 from uw_hadoop_aglorithms_spark.functions.rounding import fround
 
 #: Every QUERY_STRIDE-th vector is a query point, capped at
@@ -70,12 +72,7 @@ def hyperplanes() -> list[list[float]]:
 
 
 def _dot_lit(vec: Column, plane: list[float]) -> Column:
-    lit_arr = F.array(*[F.lit(x) for x in plane])
-    return F.aggregate(
-        F.zip_with(vec, lit_arr, lambda x, w: x * w),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return folds.dot_col(vec, F.array(*[F.lit(x) for x in plane]))
 
 
 def _bucket(vec: Column) -> Column:
@@ -106,28 +103,13 @@ def _normed(
             *extra_cols,
             F.col("embedding").cast("array<double>").alias("v"),
         )
-        .withColumn(
-            "nrm",
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("v"), lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-        )
+        .withColumn("nrm", F.sqrt(folds.sumsq_col(F.col("v"))))
     )
 
 
 def _cosine(a: str, b: str) -> Column:
-    dot = F.aggregate(
-        F.zip_with(F.col(f"{a}.v"), F.col(f"{b}.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = folds.dot_col(F.col(f"{a}.v"), F.col(f"{b}.v"))
     return dot / (F.col(f"{a}.nrm") * F.col(f"{b}.nrm"))
-
-
 
 
 # --- round-13 Arrow/numpy scoring + encode kernels (guide §4.2) ---------------
@@ -135,12 +117,12 @@ def _cosine(a: str, b: str) -> Column:
 # The interpreted HOF folds (64-dim dots/norms per pair, the K×D cell
 # assign, the M×K×SUBDIM PQ encode) dominated every ANN member's CPU at
 # sf0.1 (member probe: brute 3.9 s, pq 4.0-4.8 s, ivf 3.0-3.4 s serial).
-# The cluster._assign_frame recipe applies: explicit per-dimension
-# `acc = acc + term` numpy accumulation reproduces the identical
-# left-to-right IEEE fold; np.argmin/argmax take the FIRST extreme,
-# matching the struct-min/max tie-breaks; np.sqrt == Math.sqrt
-# (correctly rounded); IEEE multiplication is commutative so
-# qn*cn == the Catalyst (a.nrm * b.nrm) grouping bit-for-bit.
+# Every dot/norm/distance goes through functions/folds.py, whose numpy
+# forms reproduce the identical left-to-right IEEE fold of the Catalyst
+# aggregate; np.argmin/argmax take the FIRST extreme, matching the
+# struct-min/max tie-breaks; np.sqrt == Math.sqrt (correctly rounded);
+# IEEE multiplication is commutative so qn*cn == the Catalyst
+# (a.nrm * b.nrm) grouping bit-for-bit.
 #
 # Query sets are BOUNDED (<= ANN_MAX_QUERIES — the long-standing
 # broadcast argument), so collecting them to the driver is the same
@@ -151,22 +133,6 @@ def _cosine(a: str, b: str) -> Column:
 # proportional to the probed fraction — the members' scale contracts
 # are unchanged (the Catalyst forms remain below as parity references,
 # pinned in tests/test_similarity.py).
-
-
-def _norm_py(v) -> float:
-    import math
-
-    acc = 0.0
-    for x in v:
-        acc = acc + x * x
-    return math.sqrt(acc)
-
-
-def _dot_py(a, b) -> float:
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
 
 
 def _vec_scan(
@@ -194,7 +160,7 @@ def _collect_queries(
         {
             "qid": int(r.vec_id),
             "v": list(r.v),
-            "nrm": _norm_py(r.v),
+            "nrm": folds.norm(r.v),
             **{c: r[c] for c in extra_cols},
         }
         for r in rows
@@ -205,7 +171,7 @@ def _query_probe_cells(qv, qn, cents, nprobe: int = IVF_NPROBE) -> list[int]:
     """Top-nprobe cells by (cosine DESC, idx ASC) — the driver-side
     mirror of reverse(array_sort(_ivf_assign_structs(...)))[:nprobe]."""
     scored = [
-        (_dot_py(qv, cvec) / (qn * cnorm), -idx) for idx, cvec, cnorm in cents
+        (folds.dot(qv, cvec) / (qn * cnorm), -idx) for idx, cvec, cnorm in cents
     ]
     scored.sort(reverse=True)
     return [-nj for _c, nj in scored[:nprobe]]
@@ -215,12 +181,34 @@ def _query_lsh_probes(qv) -> list[int]:
     """Own bucket + hamming-1 buckets, driver-side (_bucket mirror)."""
     b = 0
     for p, plane in enumerate(hyperplanes()):
-        if _dot_py(qv, plane) > 0:
+        if folds.dot(qv, plane) > 0:
             b += 1 << p
     return [b ^ m for m in PROBE_MASKS]
 
 
 _SCORE_SCHEMA = "query_id long, neighbor_id long, cosine double"
+
+
+def _vec_matrix(pdf):
+    """A batch's `v` arrays as one n×d float64 matrix."""
+    import numpy as np
+
+    return np.asarray(
+        [list(x) for x in pdf["v"]], dtype=np.float64
+    ).reshape(len(pdf), -1)
+
+
+def _cell_of(vm, nrm, clist):
+    """IVF cell per row: argmax cosine against the (idx, v, nrm)
+    centroids. np.argmax takes the first maximum == the lower idx,
+    matching array_max's (c DESC, nj=-idx) struct tie-break."""
+    import numpy as np
+
+    cnorms = np.asarray([cn for _i, _cv, cn in clist], dtype=np.float64)
+    cos = folds.dots(vm, [cv for _i, cv, _cn in clist]) / (
+        nrm[:, None] * cnorms[None, :]
+    )
+    return np.argmax(cos, axis=1)
 
 
 def _scored_pairs_kernel(
@@ -272,38 +260,21 @@ def _scored_pairs_kernel(
             if n == 0 or not qids:
                 yield empty
                 continue
-            vm = np.asarray(
-                [list(x) for x in pdf["v"]], dtype=np.float64
-            ).reshape(n, -1)
-            d = vm.shape[1]
+            vm = _vec_matrix(pdf)
             cid = pdf["vec_id"].to_numpy()
             if has_nrm_col:
                 cn_arr = pdf["nrm"].to_numpy(dtype=np.float64)
             else:
-                acc = np.zeros(n)
-                for j in range(d):
-                    acc = acc + vm[:, j] * vm[:, j]
-                cn_arr = np.sqrt(acc)
+                cn_arr = folds.norms(vm)
             key = None
             if mode == "bucket":
-                key = np.zeros(n, dtype=np.int64)
-                for p, plane in enumerate(planes):
-                    dacc = np.zeros(n)
-                    for j in range(d):
-                        dacc = dacc + vm[:, j] * plane[j]
-                    key = key + np.where(dacc > 0, 1 << p, 0)
+                bits = 1 << np.arange(len(planes), dtype=np.int64)
+                key = np.where(folds.dots(vm, planes) > 0, bits, 0).sum(axis=1)
             elif mode == "cell":
                 if has_cell_col:
                     key = pdf["cell"].to_numpy()
                 else:
-                    k = len(clist)
-                    cos = np.empty((n, k))
-                    for ki, (_i, cvec, cnorm) in enumerate(clist):
-                        dacc = np.zeros(n)
-                        for j in range(d):
-                            dacc = dacc + vm[:, j] * cvec[j]
-                        cos[:, ki] = dacc / (cn_arr * cnorm)
-                    key = np.argmax(cos, axis=1)
+                    key = _cell_of(vm, cn_arr, clist)
             labels = pdf["label"].to_numpy() if label_match else None
             out = []
             for qi in range(len(qids)):
@@ -319,16 +290,12 @@ def _scored_pairs_kernel(
                 idxs = np.nonzero(mask)[0]
                 if idxs.size == 0:
                     continue
-                sub = vm[idxs]
-                dacc = np.zeros(idxs.size)
-                for j in range(d):
-                    dacc = dacc + sub[:, j] * qma[qi, j]
-                cosv = dacc / (qna[qi] * cn_arr[idxs])
+                dot = folds.dots(vm[idxs], qma[qi:qi + 1])[:, 0]
                 out.append(
                     pd.DataFrame(
                         {"query_id": np.full(idxs.size, qids[qi], dtype=np.int64),
                          "neighbor_id": cid[idxs].astype(np.int64),
-                         "cosine": cosv}
+                         "cosine": dot / (qna[qi] * cn_arr[idxs])}
                     )
                 )
             yield pd.concat(out) if out else empty
@@ -350,10 +317,8 @@ def _pair_topk(scored: DataFrame) -> DataFrame:
 def _assign_cells_frame(vectors: DataFrame, cents) -> DataFrame:
     """(vec_id, v, nrm) → (vec_id, v, nrm, cell): the IVF cell assign as
     a numpy kernel (replaces the K×D interpreted _ivf_assign_structs
-    fold on the persisted-index build/extend paths). np.argmax takes the
-    first maximum == the lower idx, matching array_max's (c DESC,
-    nj=-idx) struct tie-break; the stored nrm column is reused so the
-    cosines are the identical doubles."""
+    fold on the persisted-index build/extend paths). The stored nrm
+    column is reused so the cosines are the identical doubles."""
     clist = [(int(i), list(cv), float(cn)) for i, cv, cn in cents]
 
     def fn(batches):
@@ -361,29 +326,17 @@ def _assign_cells_frame(vectors: DataFrame, cents) -> DataFrame:
         import pandas as pd
 
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 yield pd.DataFrame(
                     {"vec_id": pd.Series([], dtype="int64"), "v": [],
                      "nrm": pd.Series([], dtype="float64"),
                      "cell": pd.Series([], dtype="int32")}
                 )
                 continue
-            vm = np.asarray(
-                [list(x) for x in pdf["v"]], dtype=np.float64
-            ).reshape(n, -1)
-            d = vm.shape[1]
             nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            k = len(clist)
-            cos = np.empty((n, k))
-            for ki, (_i, cvec, cnorm) in enumerate(clist):
-                dacc = np.zeros(n)
-                for j in range(d):
-                    dacc = dacc + vm[:, j] * cvec[j]
-                cos[:, ki] = dacc / (nrm * cnorm)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "v": pdf["v"], "nrm": pdf["nrm"],
-                 "cell": np.argmax(cos, axis=1).astype("int32")}
+                 "cell": _cell_of(_vec_matrix(pdf), nrm, clist).astype("int32")}
             )
 
     return vectors.mapInPandas(
@@ -392,19 +345,13 @@ def _assign_cells_frame(vectors: DataFrame, cents) -> DataFrame:
 
 
 def _pq_sub_norm2(cb) -> list[list[float]]:
-    """n2[m][k] — the reconstruction norm² table _pq_recon_expr embeds,
-    computed with the identical Python left folds."""
-    out = []
-    for m in range(PQ_M):
-        lo = m * PQ_SUBDIM
-        row = []
-        for k in range(len(cb)):
-            acc = 0.0
-            for x in cb[k][lo:lo + PQ_SUBDIM]:
-                acc = acc + x * x
-            row.append(acc)
-        out.append(row)
-    return out
+    """n2[m][k] — the per-subvector norm² of codebook entry k in
+    subspace m (the reconstruction-norm² table _pq_recon_expr embeds)."""
+    return [
+        [folds.sumsq(cb[k][m * PQ_SUBDIM:(m + 1) * PQ_SUBDIM])
+         for k in range(len(cb))]
+        for m in range(PQ_M)
+    ]
 
 
 def _pq_encode_frame(vectors: DataFrame, cb, cents=None) -> DataFrame:
@@ -437,10 +384,8 @@ def _pq_encode_frame(vectors: DataFrame, cb, cents=None) -> DataFrame:
 
         cba = np.asarray(cblist, dtype=np.float64)  # K x D
         n2a = np.asarray(n2, dtype=np.float64)      # M x K
-        kk = cba.shape[0]
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 cols = {"vec_id": pd.Series([], dtype="int64"), "v": [],
                         "nrm": pd.Series([], dtype="float64")}
                 if with_cell:
@@ -450,39 +395,28 @@ def _pq_encode_frame(vectors: DataFrame, cb, cents=None) -> DataFrame:
                 cols["recon2"] = pd.Series([], dtype="float64")
                 yield pd.DataFrame(cols)
                 continue
-            vm = np.asarray(
-                [list(x) for x in pdf["v"]], dtype=np.float64
-            ).reshape(n, -1)
+            vm = _vec_matrix(pdf)
             if has_nrm:
                 nrm = pdf["nrm"].to_numpy(dtype=np.float64)
             else:
-                acc = np.zeros(n)
-                for j in range(vm.shape[1]):
-                    acc = acc + vm[:, j] * vm[:, j]
-                nrm = np.sqrt(acc)
+                nrm = folds.norms(vm)
             cols = {"vec_id": pdf["vec_id"], "v": pdf["v"], "nrm": nrm}
             if with_cell:
-                cos = np.empty((n, len(clist)))
-                for ki, (_i, cvec, cnorm) in enumerate(clist):
-                    dacc = np.zeros(n)
-                    for j in range(vm.shape[1]):
-                        dacc = dacc + vm[:, j] * cvec[j]
-                    cos[:, ki] = dacc / (nrm * cnorm)
-                cols["cell"] = np.argmax(cos, axis=1).astype("int32")
-            recon = np.zeros(n)
-            for m in range(PQ_M):
-                lo = m * PQ_SUBDIM
-                d2 = np.empty((n, kk))
-                for k in range(kk):
-                    dacc = np.zeros(n)
-                    for j in range(PQ_SUBDIM):
-                        diff = vm[:, lo + j] - cba[k, lo + j]
-                        dacc = dacc + diff * diff
-                    d2[:, k] = dacc
-                codes = np.argmin(d2, axis=1)  # first min == lower k
-                cols[f"c{m}"] = codes.astype("int32")
-                recon = recon + n2a[m][codes]
-            cols["recon2"] = recon
+                cols["cell"] = _cell_of(vm, nrm, clist).astype("int32")
+            # n x M; np.argmin's first minimum == the lower k
+            codes = np.stack(
+                [
+                    np.argmin(folds.sqdists(vm[:, sub], cba[:, sub]), axis=1)
+                    for sub in (
+                        slice(lo, lo + PQ_SUBDIM)
+                        for lo in range(0, PQ_M * PQ_SUBDIM, PQ_SUBDIM)
+                    )
+                ],
+                axis=1,
+            )
+            for m, c in enumerate(code_cols):
+                cols[c] = codes[:, m].astype("int32")
+            cols["recon2"] = folds.rowsums(n2a[np.arange(PQ_M), codes])
             yield pd.DataFrame(cols)
 
     return vectors.mapInPandas(fn, schema)
@@ -496,23 +430,33 @@ def _query_adc_tabs(qv, cb) -> list[list[float]]:
         lo = m * PQ_SUBDIM
         tabs.append(
             [
-                _dot_py(qv[lo:lo + PQ_SUBDIM], cb[k][lo:lo + PQ_SUBDIM])
+                folds.dot(qv[lo:lo + PQ_SUBDIM], cb[k][lo:lo + PQ_SUBDIM])
                 for k in range(len(cb))
             ]
         )
     return tabs
 
 
-def _adc_scored_kernel(codes_df: DataFrame, queries: list[dict]) -> DataFrame:
+def _adc_scored_kernel(
+    codes_df: DataFrame, queries: list[dict], mode: str
+) -> DataFrame:
     """(vec_id, c0.., recon2[, cell]) → (query_id, neighbor_id, adc_cos):
     compressed-domain ADC scoring, map-side. Each query's precomputed
     lookup tables ride in the closure (bounded); adc = 0.0 + Σ_m
     tab_m[c_m] in m order (the element_at sum's fold), adc_cos =
-    adc / (q.nrm * sqrt(recon2))."""
+    adc / (q.nrm * sqrt(recon2)).
+
+    mode='all'  every row but self (full-scan ADC);
+    mode='cell' stored `cell` ∈ q.probes — every query must carry
+                `probes`, or unprobed cells would be scored silently."""
+    if mode not in ("all", "cell"):
+        raise ValueError(f"unsupported ADC mode {mode!r}")
+    if mode == "cell" and any("probes" not in q for q in queries):
+        raise ValueError("mode='cell' needs `probes` on every query")
     qids = [q["qid"] for q in queries]
     qns = [q["nrm"] for q in queries]
     qtabs = [q["tabs"] for q in queries]
-    qprobes = [sorted(q["probes"]) for q in queries] if queries and "probes" in queries[0] else None
+    qprobes = [sorted(q["probes"]) for q in queries] if mode == "cell" else None
     code_cols = [f"c{m}" for m in range(PQ_M)]
 
     def fn(batches):
@@ -524,6 +468,7 @@ def _adc_scored_kernel(codes_df: DataFrame, queries: list[dict]) -> DataFrame:
              "neighbor_id": pd.Series([], dtype="int64"),
              "adc_cos": pd.Series([], dtype="float64")}
         )
+        ms = np.arange(PQ_M)
         for pdf in batches:
             n = len(pdf)
             if n == 0 or not qids:
@@ -544,15 +489,12 @@ def _adc_scored_kernel(codes_df: DataFrame, queries: list[dict]) -> DataFrame:
                 if idxs.size == 0:
                     continue
                 tab = np.asarray(qtabs[qi], dtype=np.float64)  # M x K
-                acc = np.zeros(idxs.size)
-                for m in range(PQ_M):
-                    acc = acc + tab[m][codes[idxs, m]]
-                adc = acc / (qns[qi] * rsq[idxs])
+                adc = folds.rowsums(tab[ms, codes[idxs]])
                 out.append(
                     pd.DataFrame(
                         {"query_id": np.full(idxs.size, qids[qi], dtype=np.int64),
                          "neighbor_id": cid[idxs].astype(np.int64),
-                         "adc_cos": adc}
+                         "adc_cos": adc / (qns[qi] * rsq[idxs])}
                     )
                 )
             yield pd.concat(out) if out else empty
@@ -560,6 +502,30 @@ def _adc_scored_kernel(codes_df: DataFrame, queries: list[dict]) -> DataFrame:
     return codes_df.mapInPandas(
         fn, "query_id long, neighbor_id long, adc_cos double"
     )
+
+
+def _shortlist_rerank(scored: DataFrame, vecs: DataFrame) -> DataFrame:
+    """ADC shortlist → exact rerank → top-K: compressed scoring prunes
+    the corpus to PQ_SHORTLIST rows per query, and exact cosine against
+    `vecs` ((vec_id, v, nrm) rows) touches only those — the same output
+    contract as the IVF/LSH variants, whose cosines are exact for every
+    emitted pair."""
+    wa = Window.partitionBy("query_id").orderBy(
+        F.col("adc_cos").desc(), F.col("neighbor_id")
+    )
+    shortlist = (
+        scored.withColumn("arank", F.row_number().over(wa))
+        .filter(F.col("arank") <= PQ_SHORTLIST)
+        .select("query_id", "neighbor_id")
+    )
+    q = vecs.select(F.col("vec_id").alias("query_id"), "v", "nrm").alias("q")
+    c = vecs.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm").alias("c")
+    exact = (
+        shortlist.join(q, "query_id")
+        .join(c, "neighbor_id")
+        .select("query_id", "neighbor_id", _cosine("q", "c").alias("cosine"))
+    )
+    return _pair_topk(exact)
 
 
 def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,13 +595,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[flo
         .orderBy("vec_id")
         .collect()
     )
-    out = []
-    for idx, r in enumerate(rows):
-        acc = 0.0
-        for x in r.v:
-            acc = acc + x * x
-        out.append((idx, list(r.v), acc ** 0.5))
-    return out
+    return [(idx, list(r.v), folds.norm(r.v)) for idx, r in enumerate(rows)]
 
 
 def _ivf_assign_structs(vec: Column, nrm: Column, cents) -> Column:
@@ -882,7 +842,7 @@ def embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     err2 = F.zip_with(F.col("embedding"), F.col("codes_i"), lambda e, c: err(e, c) * err(e, c))
     errabs = F.zip_with(F.col("embedding"), F.col("codes_i"), lambda e, c: F.abs(err(e, c)))
-    mse = F.aggregate(err2, F.lit(0.0), lambda acc, x: acc + x) / F.size("embedding")
+    mse = folds.sum_col(err2) / F.size("embedding")
     return q.select(
         "vec_id",
         fround("vmin_i", 9).alias("vmin"),
@@ -976,14 +936,7 @@ def _pq_recon_expr(cb) -> str:
     per-subvector norms are Python left folds — the same IEEE sequence
     as the oracle's list_reduce (the _ivf_centroids argument)."""
     recon_terms = []
-    for m in range(PQ_M):
-        n2 = []
-        for k in range(len(cb)):
-            acc = 0.0
-            lo = m * PQ_SUBDIM
-            for x in cb[k][lo:lo + PQ_SUBDIM]:
-                acc = acc + x * x
-            n2.append(acc)
+    for m, n2 in enumerate(_pq_sub_norm2(cb)):
         arr = ", ".join(f"{x!r}D" for x in n2)
         recon_terms.append(f"element_at(array({arr}), c{m} + 1)")
     return "0.0D + " + " + ".join(recon_terms) + " AS recon2"
@@ -1038,52 +991,11 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for q in qs:
         q["tabs"] = _query_adc_tabs(q["v"], cb)
     scored = _adc_scored_kernel(
-        enc.select("vec_id", *[f"c{m}" for m in range(PQ_M)], "recon2"), qs
+        enc.select("vec_id", *[f"c{m}" for m in range(PQ_M)], "recon2"),
+        qs,
+        mode="all",
     )
-    # ADC shortlist → exact rerank (the standard deployment: compressed
-    # scoring prunes the corpus to PQ_SHORTLIST rows per query, exact
-    # cosine touches only those — same output contract as the IVF/LSH
-    # variants, whose cosines are exact for every emitted pair)
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cos").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    qv = enc.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    cv = enc.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    exact = (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.aggregate(
-                F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            / (F.col("qn") * F.col("cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _shortlist_rerank(scored, enc)
 
 
 # --- persisted IVF index: the lake-maintenance form --------------------------
@@ -1114,16 +1026,8 @@ def _write_cells(df: DataFrame, table: str, mode: str) -> None:
     file-count discipline an ingest-heavy index needs (measured: the
     un-clustered save wrote ≤256 files for 8 cells and doubled the
     member's wall-clock on fixed per-file costs)."""
-    spark = df.sparkSession
     if mode == "overwrite":
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        # an orphaned location from a previous session (in-memory
-        # catalog) blocks managed-table creation; clear it
-        import shutil
-        from urllib.parse import urlparse
-
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
+        drop_managed_table(df.sparkSession, table)
     (
         df.select("vec_id", "v", "nrm", "cell")
         .repartition(IVF_NLIST, F.col("cell"))
@@ -1146,12 +1050,7 @@ def save_ann_index(
         [(i, list(v), float(n)) for i, v, n in cents],
         "idx int, v array<double>, nrm double",
     )
-    spark.sql(f"DROP TABLE IF EXISTS {prefix}_centroids")
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse}/{prefix}_centroids", ignore_errors=True)
+    drop_managed_table(spark, f"{prefix}_centroids")
     cent_df.write.mode("overwrite").format("parquet").saveAsTable(
         f"{prefix}_centroids"
     )
@@ -1340,13 +1239,8 @@ def save_pq_index(spark: SparkSession, sf_dir: str, prefix: str) -> None:
     `{prefix}_pqcb` (the frozen PQ codebook, k-ordered),
     `{prefix}_pqcodes` (vec_id, c0..c{PQ_M-1} TINYINT codes, recon2)
     partitioned by cell — one file per cell per holding task."""
-    import shutil
-    from urllib.parse import urlparse
-
     cents = _ivf_centroids(spark, sf_dir)
     cb = _pq_codebook(spark, sf_dir)
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-
     cent_df = spark.createDataFrame(
         [(i, list(v), float(n)) for i, v, n in cents],
         "idx int, v array<double>, nrm double",
@@ -1355,8 +1249,7 @@ def save_pq_index(spark: SparkSession, sf_dir: str, prefix: str) -> None:
         [(k, list(v)) for k, v in enumerate(cb)], "k int, v array<double>"
     )
     for name, df in ((f"{prefix}_centroids", cent_df), (f"{prefix}_pqcb", cb_df)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+        drop_managed_table(spark, name)
         df.write.mode("overwrite").format("parquet").saveAsTable(name)
 
     _write_pq_codes(_pq_encode(_normed(spark, sf_dir), cents, cb),
@@ -1372,14 +1265,8 @@ def _pq_encode(vectors: DataFrame, cents, cb) -> DataFrame:
 
 
 def _write_pq_codes(enc: DataFrame, table: str, mode: str) -> None:
-    spark = enc.sparkSession
     if mode == "overwrite":
-        import shutil
-        from urllib.parse import urlparse
-
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
+        drop_managed_table(enc.sparkSession, table)
     code_cols = [f"CAST(c{m} AS TINYINT) AS c{m}" for m in range(PQ_M)]
     (
         enc.selectExpr("vec_id", *code_cols, "recon2", "cell")
@@ -1432,48 +1319,8 @@ def ann_ivfpq_topk(
         q["tabs"] = _query_adc_tabs(q["v"], cb)
     probes = sorted({p for q in qs for p in q["probes"]})
     c = spark.table(f"{prefix}_pqcodes").filter(F.col("cell").isin(probes))
-    scored = _adc_scored_kernel(c, qs)
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cos").desc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    emb = _normed(spark, sf_dir)
-    qv = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    exact = (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.aggregate(
-                F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            / (F.col("qn") * F.col("cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    scored = _adc_scored_kernel(c, qs, mode="cell")
+    return _shortlist_rerank(scored, _normed(spark, sf_dir))
 
 
 def ann_ivfpq_topk_catalyst(
@@ -1544,28 +1391,12 @@ def ann_ivfpq_topk_catalyst(
         .filter(F.col("arank") <= PQ_SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    qv = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
+    rq = emb.select(F.col("vec_id").alias("query_id"), "v", "nrm").alias("rq")
+    rc = emb.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm").alias("rc")
     exact = (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.aggregate(
-                F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            / (F.col("qn") * F.col("cn")),
-        )
+        shortlist.join(rq, "query_id")
+        .join(rc, "neighbor_id")
+        .withColumn("cosine", _cosine("rq", "rc"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")

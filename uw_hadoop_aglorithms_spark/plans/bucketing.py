@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from uw_hadoop_aglorithms_spark.sources.sinks import drop_managed_table
+
 DEFAULT_BUCKETS = 8
 
 
@@ -32,15 +34,7 @@ def write_bucketed(
 
     Both sides of a future join must use the SAME bucket count for the
     exchange-free plan."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    # an orphaned location from a previous session (in-memory catalog)
-    # blocks managed-table creation; clear it
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse}/{table_name}", ignore_errors=True)
+    drop_managed_table(df.sparkSession, table_name)
     (
         # pre-cluster rows into their bucket before writing (round 12):
         # bucketBy emits one file per (task, bucket), so an N-partition

@@ -13,11 +13,23 @@ alternate codec for format parity (P10).
 
 from __future__ import annotations
 
+import shutil
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Buckets for the postings sink — point lookups prune to one bucket.
 POSTINGS_BUCKETS = 8
+
+
+def drop_managed_table(spark: SparkSession, name: str) -> None:
+    """DROP TABLE IF EXISTS `name`, then remove its warehouse location:
+    an orphaned location from a previous session (in-memory catalog)
+    blocks managed-table creation under the same name."""
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
 
 
 def save_postings(postings: DataFrame, path: str) -> None:
