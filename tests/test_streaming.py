@@ -163,6 +163,54 @@ def test_stream_trending_equals_batch_except_open_windows(spark, replay):
     assert got, "stream should emit closed windows"
 
 
+def test_stream_trending_returns_utc_walls_under_process_tz(
+    spark, replay, monkeypatch
+):
+    """The trending runner returns window_start as a UTC wall
+    (TIMESTAMP_NTZ), like every other runner. PySpark renders a
+    TimestampType at collect in the PYTHON process zone, so an instant
+    return shifted every stream-side window under a non-UTC TZ and the
+    batch equality failed."""
+    import time
+
+    from pyspark.sql.types import TimestampNTZType
+
+    out = trending.stream_trending_arrivals(
+        spark, f"{replay}/events", f"{replay}/cp_trend_ntz",
+        query_name="trend_ntz",
+    )
+    assert isinstance(out.schema["window_start"].dataType, TimestampNTZType)
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        batch_rows = windows.trending_arrivals(spark, SF_TEST).collect()
+        last_window = {}
+        for r in batch_rows:
+            if (
+                r.event_type not in last_window
+                or r.window_start > last_window[r.event_type]
+            ):
+                last_window[r.event_type] = r.window_start
+        expected = {
+            (r.event_type, r.window_start, r.cnt, r.prev, r.alert)
+            for r in batch_rows
+            if r.window_start != last_window[r.event_type]
+        }
+        got = {
+            (r.event_type, r.window_start, r.cnt, r.prev, r.alert)
+            for r in trending.stream_trending_arrivals(
+                spark, f"{replay}/events", f"{replay}/cp_trend_tz",
+                query_name="trend_tz",
+            ).collect()
+        }
+        assert got == expected
+        assert got, "stream should emit closed windows"
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_watermark_drops_late_data(spark, replay):
     """Late-data semantics: an event arriving later than the watermark
     behind max event time is dropped by the stream but present in batch.

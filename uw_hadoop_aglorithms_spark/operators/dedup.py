@@ -42,6 +42,7 @@ from uw_hadoop_aglorithms_spark.functions.hashing import P, bucket, polyhash, uh
 from uw_hadoop_aglorithms_spark.functions.text import tokens
 from uw_hadoop_aglorithms_spark.plans.layout import shared_frame, spread_for_cpu
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
+from uw_hadoop_aglorithms_spark.sources.sinks import live_table, retract_ids
 from uw_hadoop_aglorithms_spark.session import dedup_tuned_session
 
 #: Near-dup Jaccard threshold (word-bigram shingles).
@@ -574,32 +575,11 @@ def _span_tombstone_table(prefix: str) -> str:
     return f"{prefix}_grams_tombstones"
 
 
-def _live_table(spark: SparkSession, table: str, tomb: str) -> DataFrame:
-    """An index table minus retracted documents: a BROADCAST anti-join
-    against its tombstone table (map-side, so the bucketed layout of
-    the index side survives and bucket-local joins/aggregations still
-    pay no Exchange). Reads the raw table when no retraction has ever
-    happened."""
-    df = spark.table(table)
-    if spark.catalog.tableExists(tomb):
-        df = df.join(F.broadcast(spark.table(tomb)), "doc_id", "left_anti")
-    return df
-
-
 def _live_index(spark: SparkSession, prefix: str, kind: str) -> DataFrame:
     """Near-dup family live view of `{prefix}_{kind}`."""
-    return _live_table(spark, f"{prefix}_{kind}", _tombstone_table(prefix))
-
-
-def _retract_ids(spark: SparkSession, doc_ids, tomb: str) -> None:
-    """Append retracted ids to a tombstone table (shared mechanism)."""
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id long"
-        )
-    ids.write.mode("append").format("parquet").saveAsTable(tomb)
+    return live_table(
+        spark, f"{prefix}_{kind}", _tombstone_table(prefix), "doc_id"
+    )
 
 
 def _compact_tables(
@@ -620,7 +600,7 @@ def _compact_tables(
     for kind, key in kinds_keys:
         table = f"{prefix}_{kind}"
         tmp = f"{table}__gen"
-        live = _live_table(spark, table, tomb).repartition(
+        live = live_table(spark, table, tomb, "doc_id").repartition(
             buckets, F.col(key)
         )
         bucketing.write_bucketed(live, tmp, key, buckets)
@@ -641,7 +621,7 @@ def remove_from_neardup_index(
     delete pattern (Iceberg/Delta delete files): the bucketed band/hset
     history is immutable between compactions, so retraction never
     rewrites data in the hot path."""
-    _retract_ids(spark, doc_ids, _tombstone_table(prefix))
+    retract_ids(spark, doc_ids, _tombstone_table(prefix), "doc_id")
 
 
 def compact_neardup_index(
@@ -1629,8 +1609,8 @@ def extend_span_index(docs: DataFrame, prefix: str) -> None:
 def _live_span_index(spark: SparkSession, prefix: str) -> DataFrame:
     """Span-index live view of `{prefix}_grams` (its OWN tombstones —
     see _tombstone_table for why the families never share one)."""
-    return _live_table(
-        spark, f"{prefix}_grams", _span_tombstone_table(prefix)
+    return live_table(
+        spark, f"{prefix}_grams", _span_tombstone_table(prefix), "doc_id"
     )
 
 
@@ -1641,7 +1621,7 @@ def remove_from_span_index(spark: SparkSession, prefix: str, doc_ids) -> None:
     the bucketed layout survives) — into the span index's OWN
     tombstone table, so compacting a near-dup index under the same
     prefix cannot discard a pending span retraction."""
-    _retract_ids(spark, doc_ids, _span_tombstone_table(prefix))
+    retract_ids(spark, doc_ids, _span_tombstone_table(prefix), "doc_id")
 
 
 def compact_span_index(

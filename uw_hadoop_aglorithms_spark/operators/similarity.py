@@ -33,7 +33,11 @@ from uw_hadoop_aglorithms_spark.functions import folds
 from uw_hadoop_aglorithms_spark.functions.hashing import P, hash_params
 from uw_hadoop_aglorithms_spark.plans.layout import shared_frame, spread_for_cpu
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
-from uw_hadoop_aglorithms_spark.sources.sinks import drop_managed_table
+from uw_hadoop_aglorithms_spark.sources.sinks import (
+    drop_managed_table,
+    live_table,
+    retract_ids,
+)
 from uw_hadoop_aglorithms_spark.functions.rounding import fround
 
 #: Every QUERY_STRIDE-th vector is a query point, capped at
@@ -1089,26 +1093,15 @@ def remove_from_ann_index(spark: SparkSession, prefix: str, vec_ids) -> None:
     to a tombstone table consulted by every subsequent query — logical
     immediately, physical at the next compact_ann_index. `vec_ids` is
     an iterable of ids or a DataFrame with a vec_id column."""
-    if isinstance(vec_ids, DataFrame):
-        ids = vec_ids.select(F.col("vec_id").cast("long").alias("vec_id"))
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in vec_ids], "vec_id long"
-        )
-    ids.write.mode("append").format("parquet").saveAsTable(
-        _ann_tombstone_table(prefix)
-    )
+    retract_ids(spark, vec_ids, _ann_tombstone_table(prefix), "vec_id")
 
 
 def _live_cells(spark: SparkSession, prefix: str) -> DataFrame:
-    """Index minus retracted vectors: a BROADCAST anti-join against the
-    tombstone table (map-side — partition pruning on cell survives).
-    Reads the raw table when no retraction has ever happened."""
-    df = spark.table(f"{prefix}_cells")
-    tomb = _ann_tombstone_table(prefix)
-    if spark.catalog.tableExists(tomb):
-        df = df.join(F.broadcast(spark.table(tomb)), "vec_id", "left_anti")
-    return df
+    """Index minus retracted vectors (sinks.live_table: partition
+    pruning on cell survives the broadcast anti-join)."""
+    return live_table(
+        spark, f"{prefix}_cells", _ann_tombstone_table(prefix), "vec_id"
+    )
 
 
 def compact_ann_index(spark: SparkSession, prefix: str) -> None:

@@ -595,10 +595,10 @@ def window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test_streaming.py.
 # --------------------------------------------------------------------------
 
-#: Session-scoped scrambled replay dirs, one per sf_dir (ADVICE r3: the
+#: Session-scoped replay dirs keyed by (kind, sf_dir) (ADVICE r3: the
 #: replay copy is immutable input, so re-preparing it per call only
 #: churned /tmp; atexit removes them when the process ends).
-_SBE_REPLAY: dict[str, str] = {}
+_SBE_REPLAY: dict[tuple[str, str], str] = {}
 
 #: Shuffle partitions of the stateful streams (round 12, was 4). The
 #: state exchange carries per-window PARTIAL aggregates (map-side

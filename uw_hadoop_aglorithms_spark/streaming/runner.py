@@ -7,14 +7,28 @@ at all: a file source with maxFilesPerTrigger=1 replays the same way,
 `Trigger.AvailableNow` makes the run finite, and event-time windows +
 watermark replace wall-clock batch identity. The checkpoint dir subsumes
 T4 (ssc.checkpoint).
+
+That decision is written once. `_replay` is the one file-source read
+(one file per trigger), `_drain` is the one drive (checkpoint,
+AvailableNow, run to completion), and `_to_memory` is the one
+memory-sink leg and the one UTC-wall return boundary (`walls_out`).
+Every runner here and in trending.py is built on them.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import random
+import shutil
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from uw_hadoop_aglorithms_spark.functions.render import walls_out
+from uw_hadoop_aglorithms_spark.functions.render import as_utc_instant, walls_out
 from uw_hadoop_aglorithms_spark.sources.schemas import EVENTS as _EVENTS_NTZ
 
 #: Replay granularity: events table split into this many time-range files,
@@ -79,7 +93,6 @@ def prepare_replay_dir(
     require TimestampType, so the STREAM BOUNDARY converts via
     as_utc_instant — the written instant's UTC wall IS the stored wall
     under any session zone."""
-    from uw_hadoop_aglorithms_spark.functions.render import as_utc_instant
     from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 
     (
@@ -94,10 +107,6 @@ def prepare_replay_dir(
     # partitions are written by parallel tasks in arbitrary mtime order.
     # Re-stamp mtimes to follow the part index (= ts range order), or a
     # seeded permutation of it for the scrambled-arrival variant.
-    import os
-    import random
-    import time
-
     parts = sorted(
         f for f in os.listdir(out_dir) if f.startswith("part-") and not f.endswith(".crc")
     )
@@ -105,10 +114,44 @@ def prepare_replay_dir(
         random.Random(SCRAMBLE_SEED).shuffle(parts)
     elif order != "time":
         raise ValueError(f"order must be 'time' or 'scrambled', got {order!r}")
-    base = time.time() - len(parts)
-    for i, name in enumerate(parts):
-        os.utime(os.path.join(out_dir, name), (base + i, base + i))
+    _stamp_arrival([os.path.join(out_dir, name) for name in parts])
     return out_dir
+
+
+def _stamp_arrival(paths: list[str]) -> None:
+    """Stamp mtimes one second apart in list order: the file source
+    replays in modification-time order, so list order is arrival order."""
+    base = time.time() - len(paths)
+    for i, path in enumerate(paths):
+        os.utime(path, (base + i, base + i))
+
+
+def _write_blocks(
+    blocks: list[DataFrame], out_dir: str, arrival: list[int] | range
+) -> None:
+    """Write frame k as ONE ts-sorted `block-kk.parquet` under a fresh
+    `out_dir`, then stamp mtimes so the blocks arrive in `arrival`
+    order (block indices; indices past the last block are skipped).
+
+    Overwrite semantics: stale block files from a prior run over the
+    same directory would be replayed as extra micro-batches."""
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir, exist_ok=True)
+    names = []
+    for k, frame in enumerate(blocks):
+        scratch = os.path.join(out_dir, f"_build_{k}")
+        (
+            frame.coalesce(1)
+            .sortWithinPartitions("ts")
+            .write.mode("overwrite")
+            .parquet(scratch)
+        )
+        part = glob.glob(os.path.join(scratch, "part-*.parquet"))[0]
+        dest = os.path.join(out_dir, f"block-{k:02d}.parquet")
+        shutil.move(part, dest)
+        shutil.rmtree(scratch, ignore_errors=True)
+        names.append(dest)
+    _stamp_arrival([names[k] for k in arrival if k < len(names)])
 
 
 #: Arrival permutation for the late-data replay: micro-batch i consumes
@@ -133,16 +176,9 @@ def prepare_events_late_replay_dir(
     prepare_doc_replay_dir's explicit-block trick applied to events, so
     an external oracle can reproduce the exact per-batch watermark
     sequence and with it which rows the stateful agg DROPS as late."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import Window
 
     from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
-
-    from uw_hadoop_aglorithms_spark.functions.render import as_utc_instant
 
     # stream boundary: NTZ wall -> session-independent instant
     # (prepare_replay_dir note)
@@ -154,31 +190,14 @@ def prepare_events_late_replay_dir(
     ranked = ev.withColumn(
         "rn", F.row_number().over(Window.orderBy("ts", "event_id")) - 1
     )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    names: dict[int, str] = {}
-    for k in range(REPLAY_FILES):
-        lo, hi = k * width, (k + 1) * width
-        if lo >= n:
-            break
-        scratch = os.path.join(out_dir, f"_build_{k}")
-        (
-            ranked.where((F.col("rn") >= lo) & (F.col("rn") < hi))
-            .drop("rn")
-            .coalesce(1)
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(scratch)
-        )
-        part = glob.glob(os.path.join(scratch, "part-*.parquet"))[0]
-        dest = os.path.join(out_dir, f"block-{k:02d}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(scratch, ignore_errors=True)
-        names[k] = dest
-    base = time.time() - len(names)
-    for pos, blk in enumerate(LATE_PERM):
-        if blk in names:
-            os.utime(names[blk], (base + pos, base + pos))
+    blocks = [
+        ranked.where(
+            (F.col("rn") >= k * width) & (F.col("rn") < (k + 1) * width)
+        ).drop("rn")
+        for k in range(REPLAY_FILES)
+        if k * width < n
+    ]
+    _write_blocks(blocks, out_dir, LATE_PERM)
     return out_dir
 
 
@@ -188,8 +207,6 @@ def _events_stream_schema():
     convert to a session-independent INSTANT at the stream boundary
     (watermarks reject NTZ), so the streaming read schema swaps the
     ts field to TimestampType."""
-    from pyspark.sql import types as T
-
     return T.StructType(
         [
             T.StructField("ts", T.TimestampType())
@@ -200,11 +217,70 @@ def _events_stream_schema():
     )
 
 
-def _event_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
+#: Read schema of the document replays (prepare_doc_replay_dir).
+_DOC_STREAM_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
+
+
+def _replay(
+    spark: SparkSession, replay_dir: str, schema: T.StructType
+) -> DataFrame:
+    """The one file-source read: one replay file per micro-batch (the
+    reference's one part-file per simulated minute)."""
     return (
-        spark.readStream.schema(_events_stream_schema())
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(replay_dir)
+    )
+
+
+def _event_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
+    return _replay(spark, replay_dir, _events_stream_schema())
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """The one drive: checkpoint the query, start it with AvailableNow
+    (every pending replay file, then stop) and block until it ends."""
+    (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _to_memory(
+    df: DataFrame, checkpoint_dir: str, query_name: str, mode: str
+) -> DataFrame:
+    """Drive `df` into the memory sink `query_name` and return the table
+    through the one UTC-wall return boundary: PySpark renders
+    TimestampType in the PYTHON process zone, so every runner hands
+    back NTZ walls (render.as_utc_wall)."""
+    _drain(
+        df.writeStream.format("memory").queryName(query_name).outputMode(mode),
+        checkpoint_dir,
+    )
+    return walls_out(df.sparkSession.table(query_name))
+
+
+def _window_counts(
+    events: DataFrame, minutes: int, *keys: str, slide: int | None = None
+) -> DataFrame:
+    """Watermarked event-time window counts per `keys`:
+    (window_start, *keys, cnt); `slide` makes the windows sliding."""
+    w = F.window(
+        "ts", f"{minutes} minutes", None if slide is None else f"{slide} minutes"
+    )
+    return (
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(w.alias("w"), *keys)
+        .agg(F.count("*").alias("cnt"))
+        .select(F.col("w.start").alias("window_start"), *keys, "cnt")
     )
 
 
@@ -217,23 +293,10 @@ def stream_event_count(
 ) -> DataFrame:
     """T1 as a real stream: watermarked tumbling-window counts, run to
     completion with AvailableNow; returns the final result table."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
+    agg = _window_counts(_event_stream(spark, replay_dir), minutes)
+    return _to_memory(agg, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start")
 
 
 def stream_event_count_append(
@@ -247,23 +310,10 @@ def stream_event_count_append(
     and input rows later than the watermark are DROPPED — the late-data
     semantics the reference's perfectly-ordered replay never exercises.
     The final (non-finalized) window is absent from the output."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
+    agg = _window_counts(_event_stream(spark, replay_dir), minutes)
+    return _to_memory(agg, checkpoint_dir, query_name, "append").orderBy(
+        "window_start"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start")
 
 
 def stream_sliding_event_count(
@@ -276,25 +326,10 @@ def stream_sliding_event_count(
 ) -> DataFrame:
     """Sliding windows (width > slide) as a real stream: each event joins
     width/slide open windows; watermark bounds the open-window state."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(
-            F.window("ts", f"{minutes} minutes", f"{slide} minutes").alias("w")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
+    agg = _window_counts(_event_stream(spark, replay_dir), minutes, slide=slide)
+    return _to_memory(agg, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start")
 
 
 def stream_geo_region_count(
@@ -310,25 +345,15 @@ def stream_geo_region_count(
     from uw_hadoop_aglorithms_spark.functions.geo import region_tag, synth_lonlat
 
     lon, lat = synth_lonlat(F.col("event_id"))
-    agg = (
+    tagged = (
         _event_stream(spark, replay_dir)
         .select("ts", region_tag(lon, lat).alias("region"))
         .where(F.col("region").isNotNull())
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "region")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "region", "cnt")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    agg = _window_counts(tagged, minutes, "region")
+    return _to_memory(agg, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start", "region"
     )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start", "region")
 
 
 def stream_range_join(
@@ -376,16 +401,11 @@ def stream_range_join(
         & (F.col("o_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {RANGE_WINDOW_S} SECONDS"))
         & (F.col("o_ts") <= F.col("p_ts") + F.expr(f"INTERVAL {RANGE_WINDOW_S} SECONDS")),
     ).select("purchase_id", "other_id", "user_id", "other_type")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return (
+        _to_memory(joined, checkpoint_dir, query_name, "append")
+        .distinct()
+        .orderBy("purchase_id", "other_id")
     )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name).distinct()).orderBy("purchase_id", "other_id")
 
 
 def stream_user_sessions(
@@ -421,16 +441,9 @@ def stream_user_sessions(
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _to_memory(agg, checkpoint_dir, query_name, "append").orderBy(
+        "user_id", "session_start"
     )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("user_id", "session_start")
 
 
 def stream_region_event_count(
@@ -441,25 +454,10 @@ def stream_region_event_count(
     query_name: str = "stream_region_event_count",
 ) -> DataFrame:
     """T2 as a real stream: windowed counts per event_type."""
-    agg = (
-        _event_stream(spark, replay_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(
-            F.window("ts", f"{minutes} minutes").alias("w"), F.col("event_type")
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
+    agg = _window_counts(_event_stream(spark, replay_dir), minutes, "event_type")
+    return _to_memory(agg, checkpoint_dir, query_name, "complete").orderBy(
+        "window_start", "event_type"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("window_start", "event_type")
 
 
 #: Ingestion-time dedup: duplicates arriving within this event-time
@@ -490,14 +488,7 @@ def prepare_doc_replay_dir(
     so an external oracle can reproduce the micro-batch boundaries (one
     file = one AvailableNow batch) and with them the exact per-batch
     watermark sequence in closed form: wm(k) = ts(k*W - 1) - delay."""
-    import glob
-    import os
-    import shutil
-    import time
-
     from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
-
-    from uw_hadoop_aglorithms_spark.functions.render import as_utc_instant
 
     docs = Catalog(spark, sf_dir).documents.select(
         "doc_id",
@@ -512,31 +503,14 @@ def prepare_doc_replay_dir(
     )
     n = docs.count()
     width = -(-n // DOC_REPLAY_FILES)
-    # overwrite semantics: stale block-*/part-* files from a prior run
-    # over the same directory would be replayed as extra micro-batches
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    names = []
-    for k in range(DOC_REPLAY_FILES):
-        lo, hi = k * width, (k + 1) * width
-        if lo >= n:
-            break
-        scratch = os.path.join(out_dir, f"_build_{k}")
-        (
-            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            .coalesce(1)
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(scratch)
+    blocks = [
+        docs.where(
+            (F.col("doc_id") >= k * width) & (F.col("doc_id") < (k + 1) * width)
         )
-        part = glob.glob(os.path.join(scratch, "part-*.parquet"))[0]
-        dest = os.path.join(out_dir, f"block-{k:02d}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(scratch, ignore_errors=True)
-        names.append(dest)
-    base = time.time() - len(names)
-    for i, dest in enumerate(names):
-        os.utime(dest, (base + i, base + i))
+        for k in range(DOC_REPLAY_FILES)
+        if k * width < n
+    ]
+    _write_blocks(blocks, out_dir, range(len(blocks)))
     return out_dir
 
 
@@ -560,20 +534,9 @@ def stream_exact_dedup(
     front-door filter a 100 TB pipeline runs so most duplicates never
     land in the lake at all.
     """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
+        _replay(spark, replay_dir, _DOC_STREAM_SCHEMA)
         .select("doc_id", "ts", F.sha2(norm, 256).alias("digest"))
         .withWatermark("ts", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["digest"])
@@ -583,25 +546,15 @@ def stream_exact_dedup(
     # cannot RECOVER from a checkpoint, so restart semantics are only
     # testable (and only deployable) against the durable sink
     if output_dir is None:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        return _to_memory(stream, checkpoint_dir, query_name, "append").orderBy(
+            "ts", "doc_id"
         )
-        q.awaitTermination()
-        return walls_out(spark.table(query_name)).orderBy("ts", "doc_id")
-    q = (
+    _drain(
         stream.writeStream.format("parquet")
         .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", output_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     # same return boundary as the memory-sink leg: instants -> UTC walls
     return walls_out(spark.read.parquet(output_dir)).orderBy("ts", "doc_id")
 
@@ -629,8 +582,6 @@ def stream_decontaminate(
     audit. Counts carry the bitmap's deterministic false positives,
     identical to the batch Bloom variant (asserted in tests).
     """
-    from pyspark.sql import types as T
-
     from uw_hadoop_aglorithms_spark.operators import dedup
     from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 
@@ -642,17 +593,8 @@ def stream_decontaminate(
     )
     bitmap = dedup.bloom_bitmap_from_grams(held_sh.select("gh").distinct())
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
     stream_docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
+        _replay(spark, replay_dir, _DOC_STREAM_SCHEMA)
         .where(F.col("doc_id") % dedup.DECON_TEST_MOD != 0)
         .withWatermark("ts", WATERMARK)
     )
@@ -665,16 +607,9 @@ def stream_decontaminate(
         .agg(F.count("*").alias("n_shared_ngrams"))
         .select(F.col("w.start").alias("window_start"), "doc_id", "n_shared_ngrams")
     )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _to_memory(counts, checkpoint_dir, query_name, "append").orderBy(
+        "doc_id"
     )
-    q.awaitTermination()
-    return walls_out(spark.table(query_name)).orderBy("doc_id")
 
 
 def stream_merge_to_lake(
@@ -721,8 +656,6 @@ def stream_merge_to_lake(
     it must therefore be idempotent given (lake state, days), which a
     day-scoped rebuild is by construction.
     """
-    import os
-
     from uw_hadoop_aglorithms_spark.sources import lake as lake_mod
 
     def _merge_batch(batch, _bid: int) -> None:
@@ -750,14 +683,10 @@ def stream_merge_to_lake(
         if post_merge is not None and days:
             post_merge(days)
 
-    q = (
-        _event_stream(spark, replay_dir)
-        .writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _event_stream(spark, replay_dir).writeStream.foreachBatch(_merge_batch),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def stream_neardup_ingest(
@@ -811,23 +740,11 @@ def stream_neardup_ingest(
     the duplicate band rows that leaves are harmless — candidate pairs
     are `.distinct()`-ed before verification and hsets stayed unique.
     """
-    import os
-
-    from pyspark.sql import types as T
-
     from uw_hadoop_aglorithms_spark.operators import dedup
 
     cap = dedup.BAND_BUCKET_CAP if bucket_cap is None else bucket_cap
     gated_path = pairs_path.rstrip("/") + "_gated"
     log_table = f"{prefix}_ingest_log"
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
 
     def _ingest(batch, bid: int) -> None:
         # EVERYTHING here runs through the batch's own (cloned
@@ -884,14 +801,10 @@ def stream_neardup_ingest(
             "append"
         ).format("parquet").saveAsTable(log_table)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-        .writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _replay(spark, replay_dir, _DOC_STREAM_SCHEMA).writeStream.foreachBatch(
+            _ingest
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return spark.read.parquet(pairs_path).orderBy("doc_a", "doc_b")

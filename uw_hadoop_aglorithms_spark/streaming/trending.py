@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from uw_hadoop_aglorithms_spark.streaming.runner import _event_stream
+from uw_hadoop_aglorithms_spark.streaming.runner import _event_stream, _to_memory
 from uw_hadoop_aglorithms_spark.streaming.windows import TREND_FACTOR, TREND_MIN
 
 WINDOW_SECONDS = 600  # 10-minute windows (reference TrendingArrivals.scala:108)
@@ -81,7 +81,8 @@ def stream_trending_arrivals(
     query_name: str = "stream_trending_arrivals",
 ) -> DataFrame:
     """Run the stateful trend detector over a file-replay stream to
-    completion; returns emitted (closed-window) alerts."""
+    completion; returns emitted (closed-window) alerts, window_start as
+    a UTC wall (TIMESTAMP_NTZ) like every other runner."""
     stream = _event_stream(spark, replay_dir).select("ts", "event_type")
     flagged = stream.groupBy("event_type").applyInPandasWithState(
         _trend_state_fn,
@@ -90,13 +91,6 @@ def stream_trending_arrivals(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        flagged.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _to_memory(flagged, checkpoint_dir, query_name, "append").orderBy(
+        "event_type", "window_start"
     )
-    q.awaitTermination()
-    return spark.table(query_name).orderBy("event_type", "window_start")
