@@ -160,3 +160,24 @@ def test_parquet_checkpoint_mode_equals_local(spark, tmp_path):
     }
     assert ppr_base.keys() == ppr_ckpt.keys()
     assert max(abs(ppr_base[k] - ppr_ckpt[k]) for k in ppr_base) < tol
+
+
+def test_rank_slots_are_independent(spark):
+    """One quantized loop carrying every source plus GLOBAL: each slot's
+    ranks bit-equal the same slot run alone, so slots never interact
+    (the quantized sums are exact, so the comparison can be too)."""
+    vertices, edges = graph.build_graph(spark, SF_TEST)
+
+    def slots(sources, uniform):
+        out = defaultdict(dict)
+        for r in graph._rank_slots(
+            spark, vertices, edges, sources, uniform, quantize=True
+        ).collect():
+            out[r.source][r.id] = r.rank
+        return out
+
+    together = slots(SOURCES, True)
+    assert set(together) == {*SOURCES, graph.GLOBAL}
+    for src in SOURCES:
+        assert together[src] == slots((src,), False)[src]
+    assert together[graph.GLOBAL] == slots((), True)[graph.GLOBAL]

@@ -10,9 +10,9 @@ A,B,A,B,… so the host's multi-minute slow windows tax both variants
 equally, and the report gives per-key median AND min per variant.
 
 Usage:
-    python tools/ab_cold.py --name aqe_floor \
-        --keys ann_topk,pack_sequences --reps 5 --cpus 32 \
-        --var SPARK_GRAFT_AQE_MIN_PARTITION_SIZE=64k,1m
+    python tools/ab_cold.py --name shared_frame \
+        --keys dedup_clusters,corpus_curation --reps 5 --cpus 32 \
+        --var SPARK_GRAFT_SHARED_FRAME_STORAGE=local,disk2
 
 Writes plans/r13/ab_<name>.json and prints a compact table.
 """

@@ -4,10 +4,11 @@ Times each similarity member in ONE cold JVM with the noop sink
 (guide §1.4) and labelled jobs, in the SAME alphabetical-first position
 ann_topk occupies in the bench, then the two persisted-index members
 phase by phase (build / extend / query) so the catalog-write cost is
-attributable. Run it under both AQE floors to separate floor effects
-from member effects:
+attributable. Run it under both AQE floors (the argument sets
+spark.sql.adaptive.coalescePartitions.minPartitionSize; without one,
+Spark's 1m default holds) to separate floor effects from member effects:
 
-    SPARK_GRAFT_AQE_MIN_PARTITION_SIZE=64k python tools/ann_probe.py
+    python tools/ann_probe.py 64k
 """
 from __future__ import annotations
 
@@ -40,7 +41,10 @@ def noop(df):
 
 
 timings: dict[str, float] = {}
-spark = get_spark("ann-probe")
+FLOOR_CONF = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+spark = get_spark(
+    "ann-probe", extra_conf={FLOOR_CONF: sys.argv[1]} if len(sys.argv) > 1 else None
+)
 spark.sparkContext.setLogLevel("ERROR")
 t("warmup_nation_count", lambda: spark.read.parquet(f"{SF_DIR}/nation.parquet").count())
 
@@ -81,6 +85,6 @@ finally:
     for tb in (f"{prefix2}_pqcodes", f"{prefix2}_centroids", f"{prefix2}_pqcb"):
         spark.sql(f"DROP TABLE IF EXISTS {tb}")
 
-floor = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
+floor = spark.conf.get(FLOOR_CONF, "1m")
 print(json.dumps({"floor": floor, "timings": timings}))
 spark.stop()

@@ -388,7 +388,9 @@ def run(spark) -> dict:
     # what does the state-sized heuristic pick at 10×?
     _, edges = graph.build_graph(spark, d)
     n_edges = edges.count()
-    pr_parts = graph._loop_shuffle_partitions(spark, n_edges * 3).n
+    pr_parts = graph._loop_shuffle_partitions(
+        spark, n_edges * (len(graph.DEFAULT_SOURCES) + 1)
+    ).n
     print(f"graph edges: {n_edges}  -> loop shuffle partitions: {pr_parts}")
 
     results = {}

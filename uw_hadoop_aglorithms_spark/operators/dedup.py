@@ -837,8 +837,12 @@ def cluster_pairs(
                 break
             rounds += 1
             if rounds >= max_lp_rounds:
-                labels = _cc_escape(edges, labels)
+                # materialized before the release below: it reads edges
+                labels = _cc_escape(edges, labels).localCheckpoint(eager=True)
                 break
+    # the labels are materialized, so nothing reads the cached pair
+    # graph any more; left cached, every call would pin one new entry
+    edges.unpersist()
     return labels
 
 

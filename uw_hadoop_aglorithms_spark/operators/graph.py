@@ -30,8 +30,12 @@ Scale design (100 TB / 1000-executor target):
   `checkpoint_dir`, every CHECKPOINT_EVERY-th iteration lands in durable
   parquet instead (_materialize) — the cluster deployment mode: bounded
   executor memory, restartable, identical ranks (bit-exact, tested).
-- Edges are re-used every iteration: cached once, partitioned by src so the
-  scatter join co-locates with the rank state.
+- Edges are re-used every iteration: cached for the length of one loop,
+  partitioned by src so the scatter join co-locates with the rank state,
+  and released when the loop returns (_rank_slots).
+- Uniform PageRank is one more rank slot (GLOBAL) of the same loop with
+  a uniform teleport vector, so pagerank_suite runs the global and
+  personalized ranks in one loop.
 """
 
 from __future__ import annotations
@@ -43,6 +47,9 @@ from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 
 ALPHA = 0.15  # reference RunPersonalizedPageRankBasic.java:377
 DEFAULT_SOURCES = (0, 1, 2)  # FIXTURES.md graph fixture
+#: Slot id of uniform PageRank in the rank loop; vertex ids are >= 0, so
+#: it never collides with a personalization source.
+GLOBAL = -1
 DEFAULT_ITERATIONS = 10
 #: With a checkpoint_dir, every CHECKPOINT_EVERY-th iteration goes to
 #: durable parquet instead of executor memory (SURVEY.md §7 Phase 4).
@@ -56,7 +63,7 @@ TOP_K = 20  # reference ExtractTopPersonalizedPageRankNodes.java default
 #: ~6e5 rounded values per run). Construction (ml.DYADIC_Q's, with
 #: PageRank's own envelope argument):
 #:  - each scattered contribution rank/deg AND each end-of-iteration
-#:    rank (plus the uniform loop's 1/n seed) is quantized to
+#:    rank (plus the GLOBAL slot's 1/n seed) is quantized to
 #:    floor(x·2^40 + 0.5)/2^40 — every op exact or correctly-rounded
 #:    IEEE, bit-deterministic in any engine;
 #:  - state values are then exact 2^-40 multiples, so both per-
@@ -133,9 +140,9 @@ def _materialize(
     with a deg>0 filter — 13.7 s vs 10.8 s: the filtered/projected side
     looks small enough that AQE flips the scatter to a per-iteration
     broadcast join, and ten driver round-trips cost more than the
-    narrower shuffle saves. The suite-level win that DID measure out is
-    running the two independent loops concurrently (suites.pagerank_
-    suite, ~27%).
+    narrower shuffle saves. The global and personalized ranks share one
+    loop as rank slots (_rank_slots), so pagerank_suite pays each
+    iteration's stages once, not once per loop.
 
     Default: localCheckpoint (executor-memory-pinned — fine locally,
     lost on executor failure). With `checkpoint_dir`, every
@@ -188,122 +195,19 @@ def personalized_pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = CHECKPOINT_EVERY,
     quantize: bool = False,
-    prebuilt: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """Run multi-source PPR; returns (source, id, rank) — G3-G6.
+    """Run multi-source PPR; returns (id, source, rank) — G3-G6.
 
     Per-iteration update, linear space (reference formula at :353-362):
         p'(v) = α·[v=s] + (1-α)·( Σ_{u→v} p(u)/deg(u) + missing_s·[v=s] )
     where missing_s = 1 − Σ_v gathered mass for source s (dangling loss).
     Mass is conserved exactly: Σ_v p'(v) = 1 per source.
     """
-    vertices, edges = prebuilt if prebuilt is not None else build_graph(spark, sf_dir)
-    edges = edges.cache()  # count() below materializes; outdeg/edges_adj reuse
-    scope = _loop_shuffle_partitions(spark, edges.count() * max(1, len(sources)))
-
-    with scope as n_parts:
-        outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        # deg rides in the rank STATE (vdeg below), so the edge cache is the
-        # bare (src, dst) adjacency — one long column fewer pinned and
-        # shipped through every scatter join.
-        edges_adj = edges.repartition(n_parts, F.col("src")).cache()
-
-        # (id, deg) for every vertex, deg=0 for dangling — joined back each
-        # iteration when reinstating zero-in-mass vertices, so `deg` rides in
-        # the rank state and dangling mass needs NO second pass over gathered.
-        vdeg = (
-            vertices.join(outdeg, vertices.id == outdeg.src, "left")
-            .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
-            .cache()
-        )
-
-        src_df = spark.createDataFrame(
-            [(int(s),) for s in sources], "source long"
-        )
-        # state: one row per (vertex, source); initial mass 1 at the source
-        ranks = (
-            vdeg.crossJoin(F.broadcast(src_df))
-            .select(
-                "id",
-                "source",
-                F.when(F.col("id") == F.col("source"), 1.0).otherwise(0.0).alias("rank"),
-                "deg",
-            )
-            .localCheckpoint(eager=True)
-        )
-
-        return _ppr_loop(
-            ranks, edges_adj, vdeg, src_df, iterations, alpha,
-            checkpoint_dir, checkpoint_every, quantize,
-        )
-
-
-def _ppr_loop(
-    ranks, edges_adj, vdeg, src_df, iterations, alpha,
-    checkpoint_dir=None, checkpoint_every=CHECKPOINT_EVERY, quantize=False,
-):
-    for i in range(iterations):
-        # per-source mass that will survive the scatter = rank held by
-        # non-dangling vertices; missing = 1 - that. A 3-row aggregate over
-        # the MATERIALIZED state — no recompute, no driver collect (the
-        # reference round-tripped HDFS side files here, :537-544).
-        totals = (
-            ranks.filter(F.col("deg") > 0).groupBy("source").agg(F.sum("rank").alias("m"))
-        )
-        # scatter (G3): each vertex ships rank/deg along its out-edges
-        mass = F.col("rank") / ranks.deg
-        if quantize:
-            # dyadic contributions -> the gather sum is exact (PR_Q note)
-            mass = _dyq(mass)
-        # PINNED to sort-merge (round 10, VERDICT r9 §Next 2): the rank
-        # state is the UNBOUNDED side at 100 TB (|V|×|sources| rows), so
-        # a broadcast of it never survives scale — yet near the sf0.1
-        # size threshold AQE's runtime stats flipped one per-iteration
-        # join between broadcast (181 stages) and shuffle (182 stages)
-        # depending on host era, oscillating the bench fingerprint two
-        # rounds running. An explicit MERGE hint opts the state joins
-        # out of AQE's dynamic broadcast conversion: deterministic plans
-        # across hosts AND the scale-correct shape. Values are
-        # unaffected — the hash-checked suite runs quantized (dyadic
-        # sums are order-exact).
-        contribs = (
-            edges_adj.join(ranks.hint("merge"), edges_adj.src == ranks.id)
-            .select(
-                F.col("dst").alias("id"),
-                "source",
-                mass.alias("mass"),
-            )
-        )
-        # gather (G4): sum incoming mass per (vertex, source)
-        gathered = contribs.groupBy("id", "source").agg(F.sum("mass").alias("mass"))
-        # reinstate zero-in-mass vertices, add teleport + dangling mass (G5)
-        rank_expr = (
-            F.lit(1 - alpha)
-            * (
-                F.coalesce(F.col("mass"), F.lit(0.0))
-                + F.when(
-                    F.col("id") == F.col("source"),
-                    F.lit(1.0) - F.coalesce(F.col("m"), F.lit(0.0)),
-                ).otherwise(0.0)
-            )
-            + F.when(F.col("id") == F.col("source"), F.lit(alpha)).otherwise(0.0)
-        )
-        if quantize:
-            # determinism contract for the SQL replay oracle (see PR_Q)
-            rank_expr = _dyq(rank_expr)
-        ranks = (
-            vdeg.crossJoin(F.broadcast(src_df))
-            # merge-pinned like the scatter join above: gathered is
-            # state-sized, never broadcastable at scale
-            .join(gathered.hint("merge"), ["id", "source"], "left")
-            .join(F.broadcast(totals), "source", "left")
-            .select("id", "source", rank_expr.alias("rank"), "deg")
-        )
-        # materialize EVERY iteration (G6) — see _materialize for why,
-        # and for the durable parquet mode used on a real cluster.
-        ranks = _materialize(ranks, i, checkpoint_dir, checkpoint_every)
-
-    return ranks.select("id", "source", "rank")
+    vertices, edges = build_graph(spark, sf_dir)
+    return _rank_slots(
+        spark, vertices, edges, sources, False, iterations, alpha,
+        checkpoint_dir, checkpoint_every, quantize,
+    )
 
 
 def pagerank(
@@ -314,111 +218,214 @@ def pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = CHECKPOINT_EVERY,
     quantize: bool = False,
-    prebuilt: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Uniform (non-personalized) PageRank — the reference's sequential
     oracle semantics (reference SequentialPageRank.java:100-117) as a
     distributed loop: p'(v) = α/N + (1-α)·(Σ_{u→v} p(u)/deg(u) + miss/N),
-    dangling mass redistributed uniformly. Same scatter/gather/checkpoint
-    machinery as the personalized variant, single rank slot.
+    dangling mass redistributed uniformly. Returns (id, rank): the
+    GLOBAL slot of the shared rank loop, run alone.
     """
-    vertices, edges = prebuilt if prebuilt is not None else build_graph(spark, sf_dir)
-    edges = edges.cache()  # count() below materializes; outdeg/edges_adj reuse
-    n = vertices.count()
-
-    with _loop_shuffle_partitions(spark, edges.count()) as n_parts:
-        outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        # bare (src, dst) adjacency — deg rides in the rank state instead
-        edges_adj = edges.repartition(n_parts, F.col("src")).cache()
-        vdeg = (
-            vertices.join(outdeg, vertices.id == outdeg.src, "left")
-            .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
-            .cache()
-        )
-
-        seed = F.lit(1.0 / n)
-        if quantize:
-            # 1/n is not a dyadic rational -- quantize the seed so even
-            # iteration 0's totals sum is exact (PR_Q note)
-            seed = _dyq(seed)
-        ranks = vdeg.select(
-            "id", seed.alias("rank"), "deg"
-        ).localCheckpoint(eager=True)
-
-        for i in range(iterations):
-            totals = ranks.filter(F.col("deg") > 0).select(F.sum("rank").alias("m"))
-            mass = F.col("rank") / ranks.deg
-            if quantize:
-                mass = _dyq(mass)
-            # merge-pinned like _ppr_loop: rank state is the unbounded
-            # side at scale; the hint opts it out of AQE's host-era
-            # broadcast flip (round 10, VERDICT r9 §Next 2)
-            contribs = (
-                edges_adj.join(ranks.hint("merge"), edges_adj.src == ranks.id)
-                .select(F.col("dst").alias("id"), mass.alias("mass"))
-            )
-            gathered = contribs.groupBy("id").agg(F.sum("mass").alias("mass"))
-            rank_expr = (
-                F.lit(alpha / n)
-                + F.lit(1 - alpha)
-                * (
-                    F.coalesce(F.col("mass"), F.lit(0.0))
-                    + (F.lit(1.0) - F.coalesce(F.col("m"), F.lit(0.0))) / n
-                )
-            )
-            if quantize:
-                # determinism contract for the SQL replay oracle (PR_Q)
-                rank_expr = _dyq(rank_expr)
-            ranks = (
-                vdeg.join(gathered.hint("merge"), "id", "left")
-                .crossJoin(F.broadcast(totals))
-                .select("id", rank_expr.alias("rank"), "deg")
-            )
-            ranks = _materialize(ranks, i, checkpoint_dir, checkpoint_every)
-
-    return ranks.select("id", "rank")
+    vertices, edges = build_graph(spark, sf_dir)
+    return _rank_slots(
+        spark, vertices, edges, (), True, iterations, alpha,
+        checkpoint_dir, checkpoint_every, quantize,
+    ).select("id", "rank")
 
 
-def pagerank_top20(
+def _rank_slots(
     spark: SparkSession,
-    sf_dir: str,
-    prebuilt: tuple[DataFrame, DataFrame] | None = None,
+    vertices: DataFrame,
+    edges: DataFrame,
+    sources: tuple[int, ...],
+    uniform: bool,
+    iterations: int = DEFAULT_ITERATIONS,
+    alpha: float = ALPHA,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = CHECKPOINT_EVERY,
+    quantize: bool = False,
 ) -> DataFrame:
+    """The one rank loop: one slot per personalization source, plus the
+    GLOBAL slot when `uniform`; returns (id, source, rank).
+
+    Every slot runs the same scatter/gather/dangling-mass iteration and
+    differs only in its teleport vector. Per row:
+        rank' = (1-α)·(gathered + share) + tele
+    with share = missing·[v=s], tele = α·[v=s] for a source slot s and
+    share = missing/N, tele = α/N for the GLOBAL slot. Slots never read
+    each other's rows (gather and totals group by source), so a slot's
+    ranks do not depend on which other slots ride along.
+
+    The graph frames cached here (edges, the src-partitioned adjacency,
+    per-vertex degrees) are released on return; the returned state is
+    already materialized (_materialize).
+    """
+    slots = [int(s) for s in sources] + ([GLOBAL] if uniform else [])
+    n = vertices.count() if uniform else 1  # 1/n is read by GLOBAL only
+    edges = edges.cache()  # count() below materializes; outdeg/edges_adj reuse
+    cached = [edges]
+    try:
+        with _loop_shuffle_partitions(
+            spark, edges.count() * max(1, len(slots))
+        ) as n_parts:
+            outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+            # deg rides in the rank STATE (vdeg below), so the edge cache
+            # is the bare (src, dst) adjacency — one long column fewer
+            # pinned and shipped through every scatter join.
+            edges_adj = edges.repartition(n_parts, F.col("src")).cache()
+            # (id, deg) for every vertex, deg=0 for dangling — joined back
+            # each iteration when reinstating zero-in-mass vertices, so
+            # `deg` rides in the rank state and dangling mass needs NO
+            # second pass over gathered.
+            vdeg = (
+                vertices.join(outdeg, vertices.id == outdeg.src, "left")
+                .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
+                .cache()
+            )
+            cached += [edges_adj, vdeg]
+            src_df = spark.createDataFrame([(s,) for s in slots], "source long")
+
+            is_src = F.col("id") == F.col("source")
+            is_global = F.col("source") == GLOBAL
+            # state: one row per (vertex, slot); mass 1 at a source, 1/N
+            # on every vertex of the GLOBAL slot
+            seed = F.lit(1.0 / n)
+            if quantize:
+                # 1/n is not a dyadic rational -- quantize the seed so even
+                # iteration 0's totals sum is exact (PR_Q note)
+                seed = _dyq(seed)
+            ranks = (
+                vdeg.crossJoin(F.broadcast(src_df))
+                .select(
+                    "id",
+                    "source",
+                    F.when(is_global, seed)
+                    .when(is_src, 1.0)
+                    .otherwise(0.0)
+                    .alias("rank"),
+                    "deg",
+                )
+                .localCheckpoint(eager=True)
+            )
+
+            for i in range(iterations):
+                # per-slot mass that will survive the scatter = rank held
+                # by non-dangling vertices; missing = 1 - that. A
+                # |slots|-row aggregate over the MATERIALIZED state — no
+                # recompute, no driver collect (the reference round-
+                # tripped HDFS side files here, :537-544).
+                totals = (
+                    ranks.filter(F.col("deg") > 0)
+                    .groupBy("source")
+                    .agg(F.sum("rank").alias("m"))
+                )
+                # scatter (G3): each vertex ships rank/deg along its out-edges
+                mass = F.col("rank") / ranks.deg
+                if quantize:
+                    # dyadic contributions -> the gather sum is exact (PR_Q note)
+                    mass = _dyq(mass)
+                # PINNED to sort-merge (round 10, VERDICT r9 §Next 2): the
+                # rank state is the UNBOUNDED side at 100 TB (|V|×|slots|
+                # rows), so a broadcast of it never survives scale — yet
+                # near the sf0.1 size threshold AQE's runtime stats flipped
+                # one per-iteration join between broadcast (181 stages) and
+                # shuffle (182 stages) depending on host era, oscillating
+                # the bench fingerprint two rounds running. An explicit
+                # MERGE hint opts the state joins out of AQE's dynamic
+                # broadcast conversion: deterministic plans across hosts
+                # AND the scale-correct shape. Values are unaffected — the
+                # hash-checked suite runs quantized (dyadic sums are
+                # order-exact).
+                contribs = (
+                    edges_adj.join(ranks.hint("merge"), edges_adj.src == ranks.id)
+                    .select(
+                        F.col("dst").alias("id"),
+                        "source",
+                        mass.alias("mass"),
+                    )
+                )
+                # gather (G4): sum incoming mass per (vertex, slot)
+                gathered = contribs.groupBy("id", "source").agg(
+                    F.sum("mass").alias("mass")
+                )
+                # reinstate zero-in-mass vertices, add teleport + dangling
+                # mass (G5)
+                missing = F.lit(1.0) - F.coalesce(F.col("m"), F.lit(0.0))
+                share = (
+                    F.when(is_global, missing / n).when(is_src, missing).otherwise(0.0)
+                )
+                tele = (
+                    F.when(is_global, F.lit(alpha / n))
+                    .when(is_src, F.lit(alpha))
+                    .otherwise(0.0)
+                )
+                rank_expr = (
+                    F.lit(1 - alpha) * (F.coalesce(F.col("mass"), F.lit(0.0)) + share)
+                    + tele
+                )
+                if quantize:
+                    # determinism contract for the SQL replay oracle (see PR_Q)
+                    rank_expr = _dyq(rank_expr)
+                ranks = (
+                    vdeg.crossJoin(F.broadcast(src_df))
+                    # merge-pinned like the scatter join above: gathered is
+                    # state-sized, never broadcastable at scale
+                    .join(gathered.hint("merge"), ["id", "source"], "left")
+                    .join(F.broadcast(totals), "source", "left")
+                    .select("id", "source", rank_expr.alias("rank"), "deg")
+                )
+                # materialize EVERY iteration (G6) — see _materialize for
+                # why, and for the durable parquet mode used on a real
+                # cluster.
+                ranks = _materialize(ranks, i, checkpoint_dir, checkpoint_every)
+
+        return ranks.select("id", "source", "rank")
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _top20(ranks: DataFrame) -> DataFrame:
+    """Top-TOP_K vertices per rank slot as (source, id, rank, pos) — G7 as
+    a window rank, replacing the reference's mapper-side bounded priority
+    queues + single reducer (reference
+    ExtractTopPersonalizedPageRankNodes.java:58-147). A source slot ranks
+    by raw rank and reports it rounded to 6 decimals; the GLOBAL slot
+    rounds to 9 decimals first and ranks by that (ties to the smaller id)."""
+    from pyspark.sql import Window
+
+    is_global = F.col("source") == GLOBAL
+    rank = F.when(is_global, F.round("rank", 9)).otherwise(F.col("rank"))
+    w = Window.partitionBy("source").orderBy(rank.desc(), F.col("id"))
+    return (
+        ranks.withColumn("pos", F.row_number().over(w))
+        .where(F.col("pos") <= TOP_K)
+        .select(
+            "source",
+            "id",
+            F.when(is_global, F.round("rank", 9))
+            .otherwise(F.round("rank", 6))
+            .alias("rank"),
+            "pos",
+        )
+    )
+
+
+def pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-20 by uniform PageRank. Runs with the per-iteration
     PR_Q dyadic contract, so the iteration-replaying DuckDB oracle
     (_pagerank_suite_oracle) value-hash-checks it; the UNROUNDED loop is
     separately validated against the sequential Python oracle in
-    tests/test_graph.py. `prebuilt` lets the suite share one graph build
-    across the global and personalized runs."""
-    ranks = pagerank(spark, sf_dir, quantize=True, prebuilt=prebuilt)
-    return (
-        ranks.select("id", F.round("rank", 9).alias("rank"))
-        .orderBy(F.col("rank").desc(), F.col("id"))
-        .limit(TOP_K)
-    )
+    tests/test_graph.py."""
+    vertices, edges = build_graph(spark, sf_dir)
+    ranks = _rank_slots(spark, vertices, edges, (), True, quantize=True)
+    return _top20(ranks).orderBy("pos").select("id", "rank")
 
 
-def ppr_top20(
-    spark: SparkSession,
-    sf_dir: str,
-    prebuilt: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Top-20 vertices per source by rank — G7 as a window rank, replacing
-    the reference's mapper-side bounded priority queues + single reducer
-    (reference ExtractTopPersonalizedPageRankNodes.java:58-147). Runs
-    with the PR_Q per-iteration contract (see pagerank_top20)."""
-    from pyspark.sql import Window
-
-    ranks = personalized_pagerank(
-        spark, sf_dir, quantize=True, prebuilt=prebuilt
-    )
-    w = Window.partitionBy("source").orderBy(F.col("rank").desc(), F.col("id"))
-    return (
-        ranks.withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= TOP_K)
-        .select("source", "id", F.round("rank", 6).alias("rank"), "pos")
-        .orderBy("source", "pos")
-    )
+def ppr_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 vertices per source by rank (_top20). Runs with the PR_Q
+    per-iteration contract (see pagerank_top20)."""
+    ranks = personalized_pagerank(spark, sf_dir, quantize=True)
+    return _top20(ranks).orderBy("source", "pos")
 
 
 # --- generated DuckDB replay oracle ------------------------------------------
@@ -426,9 +433,11 @@ def ppr_top20(
 # The same trick that made kmeans_clusters hash-checkable (cluster.py):
 # replay every iteration as a chained CTE, with BOTH engines quantizing
 # contributions and state to the PR_Q dyadic grid per iteration. Each
-# arithmetic step mirrors the Spark expression's operand order exactly;
-# dyadic state makes every sum EXACT (order-independent), so parity is
-# bit-for-bit with zero residual tie risk (PR_Q note).
+# arithmetic step mirrors the Spark expression's operations exactly (the
+# GLOBAL slot adds α/N last, the u_r CTEs first: one IEEE addition of
+# the same two operands, so the same double); dyadic state makes every
+# sum EXACT (order-independent), so parity is bit-for-bit with zero
+# residual tie risk (PR_Q note).
 
 
 def _pagerank_suite_oracle(

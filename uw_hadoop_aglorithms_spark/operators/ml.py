@@ -176,7 +176,7 @@ def spam_train(
 
     `inst`: optionally a precomputed instances() frame (the spam suite
     caches ONE tokenize+polyhash corpus scan and shares it across all
-    members — the pagerank_suite prebuilt-graph pattern)."""
+    members)."""
     model = _train_on(_train_split(inst if inst is not None else instances(spark, sf_dir)))
     return model.select("feature", fround("weight", 9).alias("weight")).orderBy("feature")
 

@@ -430,9 +430,9 @@ def spam(spark: SparkSession, sf_dir: str) -> DataFrame:
     per held-out doc for three of them — into Python lists and
     re-wrapped with createDataFrame, a driver footprint that grew with
     the corpus (the exact shape doc_profile was cured of in round 5)."""
-    # ONE tokenize+polyhash corpus scan serves all four members (the
-    # pagerank_suite prebuilt pattern): materialize the cache before the
-    # threads so they don't race to fill it
+    # ONE tokenize+polyhash corpus scan serves all four members:
+    # materialize the cache before the threads so they don't race to
+    # fill it
     inst = ml.instances(spark, sf_dir).cache()
     inst.count()
 
@@ -504,54 +504,28 @@ def spam(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagerank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global + personalized PageRank, one tagged result.
 
-    The two loops share one graph build AND run CONCURRENTLY from two
-    driver threads: each iteration is a couple of tiny AQE stages, so a
-    single loop leaves the scheduler mostly idle between stages —
-    overlapping the independent loops reclaims that latency (measured
-    ~27% off the suite at sf0.1; results bit-identical, since the loops
-    share nothing but the cached immutable graph). On a cluster this is
-    plain multi-job submission from one SparkSession — standard Spark,
-    scheduler-pool friendly.
-
-    The outer _loop_shuffle_partitions scope pins the conf for BOTH
-    threads (sized by the bigger PPR state); the loops' inner scopes
-    then see that value as prev AND ceiling, so their scoped writes are
-    idempotent at bench scale and merely race between the two computed
-    values on a perf-only knob otherwise — the restore back to the
-    session value happens here, after both threads join.
+    ONE rank loop (graph._rank_slots) carries a slot per
+    graph.DEFAULT_SOURCES source plus the GLOBAL slot (source = -1), so
+    the graph is built once and every iteration's scatter/gather/state
+    stages run once for all four slots. Both top-20s are one window over
+    that final state (graph._top20); the loop runs quantized (PR_Q), so
+    the DuckDB replay oracle checks every value bit for bit.
     """
-    from pyspark.sql import Window
-
     from uw_hadoop_aglorithms_spark.operators import graph
 
-    # one graph build (orders ⋈ lineitem distinct) serves both loops;
-    # cache+count BEFORE the threads so they don't race to materialize it
     vertices, edges = graph.build_graph(spark, sf_dir)
-    edges = edges.cache()
-    n_edges = edges.count()
-    prebuilt = (vertices, edges)
-
-    with graph._loop_shuffle_partitions(spark, n_edges * 3):
-        ppr_df, pr_df = _run_members({
-            "ppr": partial(graph.ppr_top20, spark, sf_dir, prebuilt),
-            "global": partial(graph.pagerank_top20, spark, sf_dir, prebuilt),
-        }).values()
-
-    ppr = ppr_df.select(
-        F.lit("ppr").alias("variant"), "source", "id", "rank", "pos"
+    ranks = graph._rank_slots(
+        spark, vertices, edges, graph.DEFAULT_SOURCES, True, quantize=True
     )
-    w = Window.orderBy(F.col("rank").desc(), F.col("id"))
-    pr = (
-        pr_df.withColumn("pos", F.row_number().over(w))
-        .select(
-            F.lit("global").alias("variant"),
-            F.lit(-1).cast("long").alias("source"),
-            "id",
-            "rank",
-            "pos",
-        )
+    return graph._top20(ranks).select(
+        F.when(F.col("source") == graph.GLOBAL, "global")
+        .otherwise("ppr")
+        .alias("variant"),
+        "source",
+        "id",
+        "rank",
+        "pos",
     )
-    return ppr.unionAll(pr)
 
 
 # --------------------------------------------------------------------------
@@ -1197,7 +1171,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are certified against the same training run word_count
     verifies.
 
-    The legs run SEQUENTIALLY, not via the pagerank_suite thread trick:
+    The legs run SEQUENTIALLY, not as _run_members threads:
     the BPE trainer scopes a session-global shuffle-partition clamp
     sized to its tiny symbol state (graph._loop_shuffle_partitions),
     and a concurrently-planning corpus-scale ws leg would pick that

@@ -18,18 +18,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
-#: AQE coalescing floor. Round 12 shipped a GLOBAL 64k floor (small
-#: shuffles otherwise coalesce to one post-shuffle partition,
-#: serializing CPU-heavy post-shuffle stages); round 13's cold-JVM
-#: suite A/B (plans/r13/ab_aqe_floor_32c.json, VERDICT r12 §Next 2)
-#: showed that floor only helps the dedup-kernel keys and TAXES every
-#: small-shuffle key (pack_sequences 6.6 vs 5.7 s, distinct_users 7.2
-#: vs 6.5, user_sessions 2.1 vs 1.8, window_counts 1.04 vs 0.95 cold
-#: medians). The global default is back to Spark's 1m; the dedup
-#: operators that measurably need the higher floor scope it to their
-#: own queries via `dedup_tuned_session` below.
-DEFAULT_AQE_MIN_PARTITION = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m")
-#: The dedup-scoped floor (see dedup_tuned_session).
+#: The dedup-scoped AQE coalescing floor (see dedup_tuned_session).
+#: Round 12 shipped a GLOBAL 64k floor (small shuffles otherwise
+#: coalesce to one post-shuffle partition, serializing CPU-heavy
+#: post-shuffle stages); round 13's cold-JVM suite A/B
+#: (plans/r13/ab_aqe_floor_32c.json, VERDICT r12 §Next 2) showed that
+#: floor only helps the dedup-kernel keys and TAXES every small-shuffle
+#: key (pack_sequences 6.6 vs 5.7 s, distinct_users 7.2 vs 6.5,
+#: user_sessions 2.1 vs 1.8, window_counts 1.04 vs 0.95 cold medians).
+#: Every other query keeps Spark's own 1m default; the dedup operators
+#: that measurably need the higher floor scope it to their own queries
+#: via `dedup_tuned_session` below.
 DEDUP_AQE_MIN_PARTITION = "64k"
 #: local-mode JVM heap: in local[*] the "executors" live inside the driver
 #: JVM, so the default 1g heap GC-thrashes under cached state + 32 task
@@ -61,10 +60,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            DEFAULT_AQE_MIN_PARTITION,
-        )
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
