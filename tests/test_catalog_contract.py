@@ -50,14 +50,13 @@ def test_declared_schemas_match_disk(spark, sf_dir):
     assert problems == []
 
 
-def test_schema_drift_raises_on_every_access(spark, tmp_path, monkeypatch):
+def test_schema_drift_raises_on_every_access(spark, tmp_path):
     """A drifted table must fail loudly on EVERY access, not only the
     first: the once-per-process check may remember a table only after
     its comparison passed, else the second access silently reads the
     renamed column as NULLs through the declared schema."""
     import duckdb
 
-    monkeypatch.delenv("SPARK_GRAFT_SKIP_SCHEMA_VALIDATION", raising=False)
     duckdb.execute(
         "COPY (SELECT r_regionkey, r_name AS r_title "
         "FROM read_parquet('/root/testdata/sf0.001/region.parquet')) "
@@ -66,3 +65,27 @@ def test_schema_drift_raises_on_every_access(spark, tmp_path, monkeypatch):
     for _ in range(2):
         with pytest.raises(ValueError, match="schema drift"):
             Catalog(spark, str(tmp_path)).region
+
+
+def test_schema_check_matches_columns_by_name(spark, tmp_path):
+    """The declared-schema read resolves parquet columns by name, so a
+    file with the right columns in another order must read correctly;
+    a changed column type must still raise."""
+    import duckdb
+
+    from tests.conftest import SF_TEST
+
+    src = f"read_parquet('{SF_TEST}/region.parquet')"
+    for sub, cols in (
+        ("reordered", "r_name, r_regionkey"),
+        ("retyped", "CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name"),
+    ):
+        (tmp_path / sub).mkdir()
+        duckdb.execute(
+            f"COPY (SELECT {cols} FROM {src}) "
+            f"TO '{tmp_path / sub}/region.parquet' (FORMAT PARQUET)"
+        )
+    want = sorted(Catalog(spark, SF_TEST).region.collect())
+    assert sorted(Catalog(spark, str(tmp_path / "reordered")).region.collect()) == want
+    with pytest.raises(ValueError, match="schema drift"):
+        Catalog(spark, str(tmp_path / "retyped")).region

@@ -816,7 +816,7 @@ def test_family_tombstones_are_isolated_per_index(spark):
         dedup.compact_neardup_index(spark, prefix)
         live_span_ids = {
             r.doc_id
-            for r in dedup._live_span_index(spark, prefix)
+            for r in dedup._live_index(spark, prefix, "grams")
             .select("doc_id").distinct().collect()
         }
         assert 2 not in live_span_ids, "span retraction resurrected"

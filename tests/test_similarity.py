@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from uw_hadoop_aglorithms_spark.operators import similarity
+from uw_hadoop_aglorithms_spark.sources import indexes
 from tests.conftest import SF_TEST
 
 
@@ -258,9 +259,9 @@ def test_ivfpq_persisted_codes_recall_exactness_and_plan(spark, brute):
         emb = similarity._normed(spark, SF_TEST)
         cents = similarity.load_ann_centroids(spark, pfx)
         cb = similarity.load_pq_codebook(spark, pfx)
-        similarity._write_pq_codes(
+        indexes.write(
             similarity._pq_encode(emb.filter(F.col("vec_id") < 250), cents, cb),
-            f"{pfx}_pqcodes", "overwrite",
+            pfx, "pqcodes",
         )
         similarity.extend_pq_index(
             spark, emb.filter(F.col("vec_id") >= 250), pfx

@@ -12,7 +12,7 @@ equally, and the report gives per-key median AND min per variant.
 Usage:
     python tools/ab_cold.py --name shared_frame \
         --keys dedup_clusters,corpus_curation --reps 5 --cpus 32 \
-        --var SPARK_GRAFT_SHARED_FRAME_STORAGE=local,disk2
+        --var SPARK_GRAFT_DRIVER_MEM=8g,16g
 
 Writes plans/r13/ab_<name>.json and prints a compact table.
 """

@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from uw_hadoop_aglorithms_spark.operators import similarity  # noqa: E402
 from uw_hadoop_aglorithms_spark.session import get_spark  # noqa: E402
+from uw_hadoop_aglorithms_spark.sources.indexes import scoped_index  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -61,29 +62,20 @@ for name, fn in (
 # persisted-IVF lifecycle, phase by phase
 from pyspark.sql import functions as F  # noqa: E402
 
-prefix = f"annprobe_idx_{os.getpid()}"
 cents = t("idx_centroids_collect", lambda: similarity._ivf_centroids(spark, SF_DIR))
 emb = similarity._normed(spark, SF_DIR)
 split = t("idx_split_percentile", lambda: emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0])
-try:
+with scoped_index(spark, "ann", "annprobe_idx") as prefix:
     t("idx_build_save", lambda: similarity.save_ann_index(
         spark, emb.filter(F.col("vec_id") <= split), prefix, cents))
     t("idx_extend_append", lambda: similarity.extend_ann_index(
         spark, emb.filter(F.col("vec_id") > split), prefix))
     t("idx_query", lambda: noop(similarity.ann_index_topk(spark, SF_DIR, prefix)))
-finally:
-    for tb in (f"{prefix}_cells", f"{prefix}_centroids",
-               f"{prefix}_cells_tombstones", f"{prefix}_cells__gen"):
-        spark.sql(f"DROP TABLE IF EXISTS {tb}")
 
 # persisted IVF-ADC lifecycle
-prefix2 = f"annprobe_pq_{os.getpid()}"
-try:
-    t("ivfpq_build_save", lambda: similarity.save_pq_index(spark, SF_DIR, prefix2))
-    t("ivfpq_query", lambda: noop(similarity.ann_ivfpq_topk(spark, SF_DIR, prefix2)))
-finally:
-    for tb in (f"{prefix2}_pqcodes", f"{prefix2}_centroids", f"{prefix2}_pqcb"):
-        spark.sql(f"DROP TABLE IF EXISTS {tb}")
+with scoped_index(spark, "pq", "annprobe_pq") as prefix:
+    t("ivfpq_build_save", lambda: similarity.save_pq_index(spark, SF_DIR, prefix))
+    t("ivfpq_query", lambda: noop(similarity.ann_ivfpq_topk(spark, SF_DIR, prefix)))
 
 floor = spark.conf.get(FLOOR_CONF, "1m")
 print(json.dumps({"floor": floor, "timings": timings}))

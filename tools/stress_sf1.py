@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from uw_hadoop_aglorithms_spark.session import get_spark
+from uw_hadoop_aglorithms_spark.sources.indexes import scoped_index
 
 SRC = "/root/testdata/sf0.1"
 REPLICAS = 10
@@ -119,8 +120,7 @@ def stress_incr_index(spark, d):
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
     old = docs.filter(F.col("doc_id") <= mid)
     new = docs.filter(F.col("doc_id") > mid)
-    prefix = f"stress_idx_{os.getpid()}"
-    try:
+    with scoped_index(spark, "neardup", "stress_idx") as prefix:
         dedup.save_neardup_index(old, prefix)
         res = dedup.incremental_neardup_pairs(spark, prefix, new).localCheckpoint()
         dedup.extend_neardup_index(new, prefix)
@@ -134,12 +134,6 @@ def stress_incr_index(spark, d):
             ).select("doc_id"),
         )
         dedup.compact_neardup_index(spark, prefix)
-    finally:
-        for t in (
-            f"{prefix}_bands", f"{prefix}_hsets", f"{prefix}_tombstones",
-            f"{prefix}_bands__gen", f"{prefix}_hsets__gen",  # compaction scratch
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
     return res
 
 
@@ -162,21 +156,13 @@ def stress_span_index(spark, d):
     n_orig = (docs.agg(F.max("doc_id")).first()[0] + 1) // REPLICAS
     old = docs.filter(F.col("doc_id") < n_orig)
     new = docs.filter(F.col("doc_id") >= n_orig)
-    prefix = f"stress_span_{os.getpid()}"
-    try:
+    with scoped_index(spark, "span", "stress_span") as prefix:
         dedup.save_span_index(old, prefix)
         res = dedup.incremental_span_profiles(
             spark, prefix, new, old
         ).localCheckpoint()
         dedup.extend_span_index(new, prefix)
         dedup.compact_span_index(spark, prefix)
-    finally:
-        for t in (
-            f"{prefix}_grams",
-            f"{prefix}_grams__gen",  # compaction scratch, leaks if the
-            f"{prefix}_grams_tombstones",  # rename never ran
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
     return res
 
 
@@ -295,8 +281,7 @@ def stress_ann_index(spark, d):
     top = emb.agg(F.max("vec_id")).first()[0]
     mid = top // 2
     n_orig = (top + 1) // REPLICAS
-    prefix = f"stress_ann_{os.getpid()}"
-    try:
+    with scoped_index(spark, "ann", "stress_ann") as prefix:
         sim.save_ann_index(
             spark, emb.filter(F.col("vec_id") <= mid), prefix, cents
         )
@@ -311,12 +296,6 @@ def stress_ann_index(spark, d):
         )
         sim.compact_ann_index(spark, prefix)
         return sim.ann_index_topk(spark, d, prefix).localCheckpoint()
-    finally:
-        for t in (
-            f"{prefix}_cells", f"{prefix}_centroids",
-            f"{prefix}_cells_tombstones", f"{prefix}_cells__gen",
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def stress_ivfpq_index(spark, d):
@@ -325,13 +304,9 @@ def stress_ivfpq_index(spark, d):
     cell-partitioned layout. Returns the top-k lists (bounded)."""
     from uw_hadoop_aglorithms_spark.operators import similarity as sim
 
-    prefix = f"stress_ivfpq_{os.getpid()}"
-    try:
+    with scoped_index(spark, "pq", "stress_ivfpq") as prefix:
         sim.save_pq_index(spark, d, prefix)
         return sim.ann_ivfpq_topk(spark, d, prefix).localCheckpoint()
-    finally:
-        for t in (f"{prefix}_pqcodes", f"{prefix}_centroids", f"{prefix}_pqcb"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def stress_stream_ingest(spark, d):
@@ -346,20 +321,15 @@ def stress_stream_ingest(spark, d):
     from uw_hadoop_aglorithms_spark.streaming import runner
 
     docs = spark.read.parquet(f"{d}/documents.parquet")
-    prefix = f"stress_sni_{os.getpid()}"
     scratch = tempfile.mkdtemp(prefix="stress_sni_")
     try:
-        replay = runner.prepare_doc_replay_dir(spark, d, f"{scratch}/replay")
-        dedup.save_neardup_index(docs.where(F.lit(False)), prefix)
-        return runner.stream_neardup_ingest(
-            spark, replay, f"{scratch}/ckpt", prefix, f"{scratch}/pairs"
-        ).localCheckpoint()
+        with scoped_index(spark, "neardup", "stress_sni") as prefix:
+            replay = runner.prepare_doc_replay_dir(spark, d, f"{scratch}/replay")
+            dedup.save_neardup_index(docs.where(F.lit(False)), prefix)
+            return runner.stream_neardup_ingest(
+                spark, replay, f"{scratch}/ckpt", prefix, f"{scratch}/pairs"
+            ).localCheckpoint()
     finally:
-        for t in (
-            f"{prefix}_bands", f"{prefix}_hsets",
-            f"{prefix}_ingest_log", f"{prefix}_tombstones",
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(scratch, ignore_errors=True)
 
 

@@ -387,8 +387,8 @@ def bpe_suite_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # suites imports this module, so its fan-out is imported here
     from uw_hadoop_aglorithms_spark.operators.suites import _run_members
 
-    # shared_frame (round 13): same eager materialization, plus the
-    # env-gated DISK_ONLY_2 mode for cluster fault tolerance
+    # shared_frame (round 13): the encoders' outputs are materialized
+    # eagerly once, so the union below never re-runs an encoder
     enc, enc_bc = _run_members({
         "bpe_encode": lambda: shared_frame(
             _enc_rows(encode_words(top_words, merges), "bpe_encode")

@@ -42,7 +42,7 @@ from uw_hadoop_aglorithms_spark.functions.hashing import P, bucket, polyhash, uh
 from uw_hadoop_aglorithms_spark.functions.text import tokens
 from uw_hadoop_aglorithms_spark.plans.layout import shared_frame, spread_for_cpu
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
-from uw_hadoop_aglorithms_spark.sources.sinks import live_table, retract_ids
+from uw_hadoop_aglorithms_spark.sources import indexes
 from uw_hadoop_aglorithms_spark.session import dedup_tuned_session
 
 #: Near-dup Jaccard threshold (word-bigram shingles).
@@ -533,6 +533,14 @@ def minhash_pairs_from_docs(
 # digest dedup (runner.stream_exact_dedup): that is the exact-duplicate
 # front door; this is the NEAR-dup back pressure run per ingest batch.
 
+def _write_neardup(docs: DataFrame, prefix: str, mode: str) -> None:
+    # bands first, hsets LAST: the streaming ingest's replay probe
+    # (runner.stream_neardup_ingest) reads hsets as the admission mark
+    hsets = hsets_from_docs(docs)
+    indexes.write(bands_from_hsets(hsets), prefix, "bands", mode)
+    indexes.write(hsets, prefix, "hsets", mode)
+
+
 def save_neardup_index(docs: DataFrame, prefix: str) -> None:
     """Persist the near-dup index for a corpus slice as two bucketed
     catalog tables: `{prefix}_bands` (doc_id, band_no, h1, h2; bucketed
@@ -540,11 +548,7 @@ def save_neardup_index(docs: DataFrame, prefix: str) -> None:
     `{prefix}_hsets` (doc_id, hs; bucketed on doc_id for the
     verification join). Growing the index after admitting a batch is an
     append of the batch's own rows to both tables."""
-    from uw_hadoop_aglorithms_spark.plans import bucketing
-
-    hsets = hsets_from_docs(docs)
-    bucketing.write_bucketed(bands_from_hsets(hsets), f"{prefix}_bands", "h1")
-    bucketing.write_bucketed(hsets, f"{prefix}_hsets", "doc_id")
+    _write_neardup(docs, prefix, "overwrite")
 
 
 def extend_neardup_index(docs: DataFrame, prefix: str) -> None:
@@ -554,97 +558,32 @@ def extend_neardup_index(docs: DataFrame, prefix: str) -> None:
     clears a batch for the lake). Fresh-build equivalence is tested:
     index(old) extended with new equals index(old ∪ new) for every
     subsequent incremental query."""
-    from uw_hadoop_aglorithms_spark.plans import bucketing
-
-    hsets = hsets_from_docs(docs)
-    bucketing.append_bucketed(bands_from_hsets(hsets), f"{prefix}_bands", "h1")
-    bucketing.append_bucketed(hsets, f"{prefix}_hsets", "doc_id")
-
-
-def _tombstone_table(prefix: str) -> str:
-    """Tombstones for the near-dup family ({prefix}_bands/_hsets). The
-    span index keeps its OWN tombstone table (_span_tombstone_table):
-    each family's compaction applies-and-drops only its own pending
-    retractions, so compacting one index under a shared prefix can
-    never silently resurrect docs retracted from the other."""
-    return f"{prefix}_tombstones"
-
-
-def _span_tombstone_table(prefix: str) -> str:
-    """Tombstones for the span index ({prefix}_grams)."""
-    return f"{prefix}_grams_tombstones"
+    _write_neardup(docs, prefix, "append")
 
 
 def _live_index(spark: SparkSession, prefix: str, kind: str) -> DataFrame:
-    """Near-dup family live view of `{prefix}_{kind}`."""
-    return live_table(
-        spark, f"{prefix}_{kind}", _tombstone_table(prefix), "doc_id"
-    )
-
-
-def _compact_tables(
-    spark: SparkSession,
-    prefix: str,
-    kinds_keys: list[tuple[str, str]],
-    tomb: str,
-    buckets: int | None,
-) -> None:
-    """Generation rewrite shared by both index families: each bucketed
-    table is rewritten ONCE pre-shuffled to its bucket spec (one file
-    per bucket) and swapped in via ALTER TABLE RENAME; the family's OWN
-    tombstone table is dropped once applied."""
-    from uw_hadoop_aglorithms_spark.plans import bucketing
-
-    if buckets is None:
-        buckets = bucketing.DEFAULT_BUCKETS
-    for kind, key in kinds_keys:
-        table = f"{prefix}_{kind}"
-        tmp = f"{table}__gen"
-        live = live_table(spark, table, tomb, "doc_id").repartition(
-            buckets, F.col(key)
-        )
-        bucketing.write_bucketed(live, tmp, key, buckets)
-        spark.sql(f"DROP TABLE {table}")
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {tomb}")
+    """`{prefix}_{kind}` minus its own family's tombstones."""
+    return indexes.live(spark, prefix, kind)
 
 
 def remove_from_neardup_index(
     spark: SparkSession, prefix: str, doc_ids
 ) -> None:
-    """Retract documents from the persisted index (takedowns,
-    re-crawls): O(|retractions|) append to a tombstone table that every
-    subsequent `incremental_neardup_pairs` consults — retraction is
-    logical immediately and physical at the next
-    `compact_neardup_index`. `doc_ids` is an iterable of ids or a
-    DataFrame with a doc_id column. Tombstones are the lake-format
-    delete pattern (Iceberg/Delta delete files): the bucketed band/hset
-    history is immutable between compactions, so retraction never
-    rewrites data in the hot path."""
-    retract_ids(spark, doc_ids, _tombstone_table(prefix), "doc_id")
+    """Retract documents (takedowns, re-crawls) via the near-dup
+    tombstones (indexes.retract): later incremental queries skip them
+    at once, compact_neardup_index applies them physically. This is
+    the lake-format delete pattern (Iceberg/Delta delete files): the
+    band/hset history is never rewritten in the hot path."""
+    indexes.retract(spark, "neardup", prefix, doc_ids)
 
 
 def compact_neardup_index(
     spark: SparkSession, prefix: str, buckets: int | None = None
 ) -> None:
     """Apply tombstones physically and bound file counts after many
-    appends: each bucketed table is rewritten ONCE into a new
-    generation — pre-shuffled with repartition(buckets, key), which
-    uses the same pmod(murmur3) partitioning as the bucket spec, so
-    every output task holds exactly one bucket and the compacted layout
-    is ONE file per bucket — then swapped in with ALTER TABLE RENAME
-    (the session-catalog form of a lake format's rewrite-then-commit;
-    on Iceberg/Delta the swap is a metadata commit). The tombstone
-    table is dropped once applied. Run cadence is a policy knob (e.g.
-    every N appends or when files/bucket exceeds a threshold); between
-    compactions queries stay correct via the tombstone anti-join."""
-    _compact_tables(
-        spark,
-        prefix,
-        [("bands", "h1"), ("hsets", "doc_id")],
-        _tombstone_table(prefix),
-        buckets,
-    )
+    appends (indexes.compact): both tables are rewritten ONCE into a
+    new generation and swapped in with ALTER TABLE RENAME."""
+    indexes.compact(spark, "neardup", prefix, buckets)
 
 
 def incremental_neardup_pairs(
@@ -1584,8 +1523,9 @@ def _span_profiles_from_starts(
 # on gh, is the whole state: gram frequencies are a bucket-local groupBy
 # (no Exchange — the layout was paid at write time), postings lookups
 # are broadcast joins against it, and per-batch work is |batch| plus the
-# docs whose coverage actually changed. Mirrors the near-dup band-index
-# lifecycle (save/extend/tombstone/compact) one screen up.
+# docs whose coverage actually changed. Tables, tombstones, compaction
+# and teardown are the shared index lifecycle of sources/indexes.py
+# (family "span", with its own tombstone table).
 # --------------------------------------------------------------------------
 
 
@@ -1593,29 +1533,13 @@ def save_span_index(docs: DataFrame, prefix: str) -> None:
     """Persist the positional-gram table for a corpus slice, bucketed
     on gh: frequency counts and crossing-gram probes both run without
     shuffling the index side."""
-    from uw_hadoop_aglorithms_spark.plans import bucketing
-
-    bucketing.write_bucketed(
-        _span_gram_rows(_span_base(docs)), f"{prefix}_grams", "gh"
-    )
+    indexes.write(_span_gram_rows(_span_base(docs)), prefix, "grams")
 
 
 def extend_span_index(docs: DataFrame, prefix: str) -> None:
     """Grow the index with an ADMITTED batch: append its gram rows into
     the same bucket layout (fresh-build equivalence tested)."""
-    from uw_hadoop_aglorithms_spark.plans import bucketing
-
-    bucketing.append_bucketed(
-        _span_gram_rows(_span_base(docs)), f"{prefix}_grams", "gh"
-    )
-
-
-def _live_span_index(spark: SparkSession, prefix: str) -> DataFrame:
-    """Span-index live view of `{prefix}_grams` (its OWN tombstones —
-    see _tombstone_table for why the families never share one)."""
-    return live_table(
-        spark, f"{prefix}_grams", _span_tombstone_table(prefix), "doc_id"
-    )
+    indexes.write(_span_gram_rows(_span_base(docs)), prefix, "grams", "append")
 
 
 def remove_from_span_index(spark: SparkSession, prefix: str, doc_ids) -> None:
@@ -1625,23 +1549,16 @@ def remove_from_span_index(spark: SparkSession, prefix: str, doc_ids) -> None:
     the bucketed layout survives) — into the span index's OWN
     tombstone table, so compacting a near-dup index under the same
     prefix cannot discard a pending span retraction."""
-    retract_ids(spark, doc_ids, _span_tombstone_table(prefix), "doc_id")
+    indexes.retract(spark, "span", prefix, doc_ids)
 
 
 def compact_span_index(
     spark: SparkSession, prefix: str, buckets: int | None = None
 ) -> None:
     """Apply tombstones physically and bound file growth: one
-    generation rewrite pre-shuffled to the bucket spec (one file per
-    bucket), swapped in via ALTER TABLE RENAME — the session-catalog
-    form of a lake format's rewrite-then-commit."""
-    _compact_tables(
-        spark,
-        prefix,
-        [("grams", "gh")],
-        _span_tombstone_table(prefix),
-        buckets,
-    )
+    generation rewrite in the bucket spec, swapped in via ALTER TABLE
+    RENAME (indexes.compact)."""
+    indexes.compact(spark, "span", prefix, buckets)
 
 
 def incremental_span_profiles(
@@ -1676,7 +1593,7 @@ def incremental_span_profiles(
     base_new = _span_base(new_docs).localCheckpoint(eager=True)
     g_new = _span_gram_rows(base_new)
     c_new = g_new.groupBy("gh").agg(F.count("*").alias("cn"))
-    g_idx = _live_span_index(spark, prefix)
+    g_idx = _live_index(spark, prefix, "grams")
     c_idx = g_idx.groupBy("gh").agg(F.count("*").alias("ci"))
     totals = (
         c_idx.join(c_new, "gh", "full_outer")
@@ -1721,7 +1638,7 @@ def removal_span_refresh(
     avoids scanning the gh-bucketed index by doc_id."""
     g_rm = _span_gram_rows(_span_base(removed_docs))
     c_rm = g_rm.groupBy("gh").agg(F.count("*").alias("cr"))
-    g_live = _live_span_index(spark, prefix)
+    g_live = _live_index(spark, prefix, "grams")
     c_live = g_live.groupBy("gh").agg(F.count("*").alias("cl"))
     downs = (
         c_rm.join(c_live, "gh")

@@ -33,11 +33,7 @@ from uw_hadoop_aglorithms_spark.functions import folds
 from uw_hadoop_aglorithms_spark.functions.hashing import P, hash_params
 from uw_hadoop_aglorithms_spark.plans.layout import shared_frame, spread_for_cpu
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
-from uw_hadoop_aglorithms_spark.sources.sinks import (
-    drop_managed_table,
-    live_table,
-    retract_ids,
-)
+from uw_hadoop_aglorithms_spark.sources import indexes
 from uw_hadoop_aglorithms_spark.functions.rounding import fround
 
 #: Every QUERY_STRIDE-th vector is a query point, capped at
@@ -59,8 +55,10 @@ PROBE_MASKS = [0] + [1 << p for p in range(NPLANES)]
 #: IVF: coarse quantizer = up to IVF_NLIST corpus vectors sampled by id
 #: (standing in for an offline-trained quantizer); every vector is
 #: assigned to its max-cosine centroid; queries probe IVF_NPROBE cells.
+#: The persisted indexes pre-cluster their cell partitions by the same
+#: count (sources/indexes.CELLS).
 IVF_CENTROID_MOD = 97
-IVF_NLIST = 8
+IVF_NLIST = indexes.CELLS
 IVF_NPROBE = 2
 
 
@@ -1013,32 +1011,19 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a realistic NLIST (thousands of cells) reads a vanishing fraction.
 # Ingest batches are assigned against the frozen codebook and appended
 # into the same partition layout; takedowns tombstone; compaction
-# applies tombstones physically and bounds file counts — the same
-# lifecycle contract as the near-dup band index (dedup.py), tested with
-# the same maintenance invariants in tests/test_similarity.py.
+# applies tombstones physically and bounds file counts. Tables,
+# tombstones, compaction and teardown are the shared index lifecycle of
+# sources/indexes.py (family "ann"), tested with the same maintenance
+# invariants as the near-dup band index in tests/test_similarity.py.
 
-def _ann_tombstone_table(prefix: str) -> str:
-    return f"{prefix}_cells_tombstones"
-
-
-def _write_cells(df: DataFrame, table: str, mode: str) -> None:
-    """(Re)write/append `(vec_id, v, nrm, cell)` rows as a catalog table
-    partitioned by cell — partition pruning is the probe mechanism.
-    Rows are pre-clustered by cell first, so every write (initial
-    build, ingest append, compaction generation) lands ONE file per
-    cell per holding task instead of |tasks|×|cells| fragments — the
-    file-count discipline an ingest-heavy index needs (measured: the
-    un-clustered save wrote ≤256 files for 8 cells and doubled the
-    member's wall-clock on fixed per-file costs)."""
-    if mode == "overwrite":
-        drop_managed_table(df.sparkSession, table)
-    (
-        df.select("vec_id", "v", "nrm", "cell")
-        .repartition(IVF_NLIST, F.col("cell"))
-        .write.mode(mode)
-        .partitionBy("cell")
-        .format("parquet")
-        .saveAsTable(table)
+def _save_centroids(spark: SparkSession, prefix: str, cents) -> None:
+    """Freeze the IVF coarse quantizer as `{prefix}_centroids`."""
+    indexes.save_frozen(
+        spark.createDataFrame(
+            [(i, list(v), float(n)) for i, v, n in cents],
+            "idx int, v array<double>, nrm double",
+        ),
+        prefix, "centroids",
     )
 
 
@@ -1050,18 +1035,10 @@ def save_ann_index(
     quantizer (idx, v, nrm — doubles roundtrip parquet exactly, so
     later assignments bit-match build-time ones), `{prefix}_cells`
     stores the assigned vectors partitioned by cell."""
-    cent_df = spark.createDataFrame(
-        [(i, list(v), float(n)) for i, v, n in cents],
-        "idx int, v array<double>, nrm double",
-    )
-    drop_managed_table(spark, f"{prefix}_centroids")
-    cent_df.write.mode("overwrite").format("parquet").saveAsTable(
-        f"{prefix}_centroids"
-    )
+    _save_centroids(spark, prefix, cents)
     # round 13: numpy assign kernel (same folds, same tie-break — see
     # _assign_cells_frame) instead of the K×D interpreted struct fold
-    assigned = _assign_cells_frame(vectors, cents)
-    _write_cells(assigned, f"{prefix}_cells", "overwrite")
+    indexes.write(_assign_cells_frame(vectors, cents), prefix, "cells")
 
 
 def load_ann_centroids(
@@ -1069,9 +1046,10 @@ def load_ann_centroids(
 ) -> list[tuple[int, list[float], float]]:
     """The frozen quantizer back from the catalog — a BOUNDED collect
     (≤IVF_NLIST rows), the codebook-load analog of _ivf_centroids."""
+    rows = spark.table(indexes.table_name(prefix, "centroids"))
     return [
         (int(r.idx), list(r.v), float(r.nrm))
-        for r in spark.table(f"{prefix}_centroids").orderBy("idx").collect()
+        for r in rows.orderBy("idx").collect()
     ]
 
 
@@ -1084,8 +1062,7 @@ def extend_ann_index(
     equivalence is tested: index(old) extended with new answers every
     query exactly like index(old ∪ new)."""
     cents = load_ann_centroids(spark, prefix)
-    assigned = _assign_cells_frame(vectors, cents)
-    _write_cells(assigned, f"{prefix}_cells", "append")
+    indexes.write(_assign_cells_frame(vectors, cents), prefix, "cells", "append")
 
 
 def remove_from_ann_index(spark: SparkSession, prefix: str, vec_ids) -> None:
@@ -1093,37 +1070,15 @@ def remove_from_ann_index(spark: SparkSession, prefix: str, vec_ids) -> None:
     to a tombstone table consulted by every subsequent query — logical
     immediately, physical at the next compact_ann_index. `vec_ids` is
     an iterable of ids or a DataFrame with a vec_id column."""
-    retract_ids(spark, vec_ids, _ann_tombstone_table(prefix), "vec_id")
-
-
-def _live_cells(spark: SparkSession, prefix: str) -> DataFrame:
-    """Index minus retracted vectors (sinks.live_table: partition
-    pruning on cell survives the broadcast anti-join)."""
-    return live_table(
-        spark, f"{prefix}_cells", _ann_tombstone_table(prefix), "vec_id"
-    )
+    indexes.retract(spark, "ann", prefix, vec_ids)
 
 
 def compact_ann_index(spark: SparkSession, prefix: str) -> None:
     """Apply tombstones physically and bound file counts after many
     appends: the live rows are rewritten ONCE pre-clustered by cell
-    (each output task holds whole cells, so the compacted layout is one
-    file per cell per holding task) and swapped in via ALTER TABLE
-    RENAME — the session-catalog form of a lake format's
-    rewrite-then-commit. The tombstone table is dropped once applied."""
-    table = f"{prefix}_cells"
-    tmp = f"{table}__gen"
-    # _write_cells pre-clusters by cell, so the generation lands one
-    # file per cell per holding task
-    live = _live_cells(spark, prefix)
-    _write_cells(live, tmp, "overwrite")
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-    # renaming a PARTITIONED managed table leaves the catalog's
-    # per-partition locations pointing at the old path (observed: the
-    # renamed table scans to 0 rows); re-derive them from the files
-    spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")
-    spark.sql(f"DROP TABLE IF EXISTS {_ann_tombstone_table(prefix)}")
+    (one file per cell) and swapped in via ALTER TABLE RENAME
+    (indexes.compact). The tombstone table is dropped once applied."""
+    indexes.compact(spark, "ann", prefix)
 
 
 def ann_index_topk(
@@ -1144,7 +1099,7 @@ def ann_index_topk(
     for q in qs:
         q["probes"] = set(_query_probe_cells(q["v"], q["nrm"], cents))
     probes = sorted({p for q in qs for p in q["probes"]})
-    c = _live_cells(spark, prefix).filter(F.col("cell").isin(probes))
+    c = indexes.live(spark, prefix, "cells").filter(F.col("cell").isin(probes))
     scored = _scored_pairs_kernel(c, qs, mode="cell")
     return _pair_topk(scored)
 
@@ -1187,7 +1142,7 @@ def ann_index_topk_catalyst(
         r.probe for r in q.select("probe").distinct().collect()
     )
     c = (
-        _live_cells(spark, prefix)
+        indexes.live(spark, prefix, "cells")
         .filter(F.col("cell").isin(probes))
         .alias("c")
     )
@@ -1234,50 +1189,33 @@ def save_pq_index(spark: SparkSession, sf_dir: str, prefix: str) -> None:
     partitioned by cell — one file per cell per holding task."""
     cents = _ivf_centroids(spark, sf_dir)
     cb = _pq_codebook(spark, sf_dir)
-    cent_df = spark.createDataFrame(
-        [(i, list(v), float(n)) for i, v, n in cents],
-        "idx int, v array<double>, nrm double",
+    _save_centroids(spark, prefix, cents)
+    indexes.save_frozen(
+        spark.createDataFrame(
+            [(k, list(v)) for k, v in enumerate(cb)], "k int, v array<double>"
+        ),
+        prefix, "pqcb",
     )
-    cb_df = spark.createDataFrame(
-        [(k, list(v)) for k, v in enumerate(cb)], "k int, v array<double>"
-    )
-    for name, df in ((f"{prefix}_centroids", cent_df), (f"{prefix}_pqcb", cb_df)):
-        drop_managed_table(spark, name)
-        df.write.mode("overwrite").format("parquet").saveAsTable(name)
-
-    _write_pq_codes(_pq_encode(_normed(spark, sf_dir), cents, cb),
-                    f"{prefix}_pqcodes", "overwrite")
+    indexes.write(_pq_encode(_normed(spark, sf_dir), cents, cb), prefix, "pqcodes")
 
 
 def _pq_encode(vectors: DataFrame, cents, cb) -> DataFrame:
-    """(vec_id, v, nrm) → (vec_id, c0.., recon2, cell): one map-side
-    pass computes the IVF cell and the PQ codes together."""
+    """(vec_id, v, nrm) → (vec_id, c0.. TINYINT, recon2, cell), the
+    stored code row: one map-side pass computes the IVF cell and the PQ
+    codes together."""
     # round 13: one numpy kernel computes the IVF cell and the PQ codes
     # together (parity-pinned); same single map-side pass as before
-    return _pq_encode_frame(vectors, cb, cents=cents)
-
-
-def _write_pq_codes(enc: DataFrame, table: str, mode: str) -> None:
-    if mode == "overwrite":
-        drop_managed_table(enc.sparkSession, table)
     code_cols = [f"CAST(c{m} AS TINYINT) AS c{m}" for m in range(PQ_M)]
-    (
-        enc.selectExpr("vec_id", *code_cols, "recon2", "cell")
-        .repartition(IVF_NLIST, F.col("cell"))
-        .write.mode(mode)
-        .partitionBy("cell")
-        .format("parquet")
-        .saveAsTable(table)
+    return _pq_encode_frame(vectors, cb, cents=cents).selectExpr(
+        "vec_id", *code_cols, "recon2", "cell"
     )
 
 
 def load_pq_codebook(spark: SparkSession, prefix: str) -> list[list[float]]:
     """The frozen PQ codebook back from the catalog — a BOUNDED collect
     (≤PQ_K rows), the codebook-load analog of _pq_codebook."""
-    return [
-        list(r.v)
-        for r in spark.table(f"{prefix}_pqcb").orderBy("k").collect()
-    ]
+    rows = spark.table(indexes.table_name(prefix, "pqcb"))
+    return [list(r.v) for r in rows.orderBy("k").collect()]
 
 
 def extend_pq_index(
@@ -1288,7 +1226,7 @@ def extend_pq_index(
     tested like the other two indexes'."""
     cents = load_ann_centroids(spark, prefix)
     cb = load_pq_codebook(spark, prefix)
-    _write_pq_codes(_pq_encode(vectors, cents, cb), f"{prefix}_pqcodes", "append")
+    indexes.write(_pq_encode(vectors, cents, cb), prefix, "pqcodes", "append")
 
 
 def ann_ivfpq_topk(
@@ -1311,7 +1249,7 @@ def ann_ivfpq_topk(
         q["probes"] = set(_query_probe_cells(q["v"], q["nrm"], cents))
         q["tabs"] = _query_adc_tabs(q["v"], cb)
     probes = sorted({p for q in qs for p in q["probes"]})
-    c = spark.table(f"{prefix}_pqcodes").filter(F.col("cell").isin(probes))
+    c = indexes.live(spark, prefix, "pqcodes").filter(F.col("cell").isin(probes))
     scored = _adc_scored_kernel(c, qs, mode="cell")
     return _shortlist_rerank(scored, _normed(spark, sf_dir))
 
@@ -1353,7 +1291,7 @@ def ann_ivfpq_topk_catalyst(
         r.probe for r in q.select("probe").distinct().collect()
     )
     c = (
-        spark.table(f"{prefix}_pqcodes")
+        indexes.live(spark, prefix, "pqcodes")
         .filter(F.col("cell").isin(probes))
         .alias("c")
     )

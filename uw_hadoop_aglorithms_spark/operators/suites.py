@@ -48,6 +48,7 @@ from uw_hadoop_aglorithms_spark.functions.days import (
     utc_epoch_day_sql,
     utc_wall_sql,
 )
+from uw_hadoop_aglorithms_spark.sources import indexes
 from uw_hadoop_aglorithms_spark.sources.catalog import Catalog
 from uw_hadoop_aglorithms_spark.streaming import windows as stream_windows
 
@@ -888,9 +889,6 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # index the lower half of the corpus, run the upper half as the
         # arriving batch; the maintenance invariant says the result is
         # exactly the batch MinHash pairs touching the new half
-        import os
-        import threading
-
         from uw_hadoop_aglorithms_spark.session import dedup_tuned_session
 
         # round 13: the incremental member's frames come from the
@@ -900,17 +898,13 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = Catalog(sdd, sf_dir).documents.count()
         split = n // 2
         docs = Catalog(sdd, sf_dir).documents
-        prefix = f"ndp_incr_{os.getpid()}_{threading.get_ident()}"
-        try:
+        with indexes.scoped_index(spark, "neardup", "ndp_incr") as prefix:
             dedup.save_neardup_index(
                 docs.where(F.col("doc_id") < split), prefix
             )
             rows = dedup.incremental_neardup_pairs(
                 sdd, prefix, docs.where(F.col("doc_id") >= split)
             ).collect()
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_bands")
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_hsets")
         return [
             (min(int(r.doc_a), int(r.doc_b)), max(int(r.doc_a), int(r.doc_b)),
              float(r.jaccard))
@@ -967,14 +961,10 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tests/test_similarity.py and the sf1 stress (a full lifecycle
         # here cost ~7 catalog writes ≈ 10 s of fixed overhead per rep —
         # measured, SCALING.md §Similarity).
-        import os
-        import threading
-
-        prefix = f"ann_idx_{os.getpid()}_{threading.get_ident()}"
         cents = similarity._ivf_centroids(spark, sf_dir)
         emb = similarity._normed(spark, sf_dir)
         split = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
-        try:
+        with indexes.scoped_index(spark, "ann", "ann_idx") as prefix:
             similarity.save_ann_index(
                 spark, emb.filter(F.col("vec_id") <= split), prefix, cents
             )
@@ -982,10 +972,6 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, emb.filter(F.col("vec_id") > split), prefix
             )
             return similarity.ann_index_topk(spark, sf_dir, prefix).collect()
-        finally:
-            for t in (f"{prefix}_cells", f"{prefix}_centroids",
-                      f"{prefix}_cells_tombstones", f"{prefix}_cells__gen"):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
 
     def grab_ivfpq():
         # round 6: IVF-ADC from PERSISTED CODES — the production
@@ -995,17 +981,9 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rerank exactly against the source table. Full relational
         # oracle (oracles._ann_ivfpq_sql). Extend-equivalence is
         # pytest-covered (tests/test_similarity.py).
-        import os
-        import threading
-
-        prefix = f"ann_pq_{os.getpid()}_{threading.get_ident()}"
-        try:
+        with indexes.scoped_index(spark, "pq", "ann_pq") as prefix:
             similarity.save_pq_index(spark, sf_dir, prefix)
             return similarity.ann_ivfpq_topk(spark, sf_dir, prefix).collect()
-        finally:
-            for t in (f"{prefix}_pqcodes", f"{prefix}_centroids",
-                      f"{prefix}_pqcb"):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
 
     got = _run_members({
         "brute": partial(grab, similarity.ann_brute_topk),
@@ -1416,8 +1394,8 @@ def layout_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        spark.sql("DROP TABLE IF EXISTS layout_orders_b")
-        spark.sql("DROP TABLE IF EXISTS layout_customer_b")
+        indexes.drop_managed_table(spark, "layout_orders_b")
+        indexes.drop_managed_table(spark, "layout_customer_b")
 
     # --- pruned: one-day read touches one dt directory -----------------
     # Round 12: the pruned leg and the merge/delete legs below share ONE

@@ -30,18 +30,17 @@ TABLE_NAMES = tuple(TABLE_SCHEMAS)
 #: column no longer fails at analysis time — Parquet fills it with
 #: NULLs silently — so drift is checked ONCE per (dir, table) per
 #: process at first access instead (ADVICE r12), from the footer the
-#: declared read skips. SPARK_GRAFT_SKIP_SCHEMA_VALIDATION=1 opts out
-#: (for deployments that control their data dir and want zero footer
-#: reads).
+#: declared read skips.
 _VALIDATED: set[tuple[str, str]] = set()
 
 
 def _schema_drift(actual: StructType, declared: StructType) -> str | None:
-    """None if names and types agree field-for-field, in order
-    (nullability is not enforced: Parquet marks all testdata columns
-    nullable); otherwise a 'disk=… declared=…' description."""
-    got = [(f.name, f.dataType.simpleString()) for f in actual.fields]
-    want = [(f.name, f.dataType.simpleString()) for f in declared.fields]
+    """None if the same column names carry the same types, in any order
+    (the declared-schema read matches columns by name; nullability is
+    not enforced: Parquet marks all testdata columns nullable);
+    otherwise a 'disk=… declared=…' description."""
+    got = {f.name: f.dataType.simpleString() for f in actual.fields}
+    want = {f.name: f.dataType.simpleString() for f in declared.fields}
     return None if got == want else f"disk={got} declared={want}"
 
 
@@ -95,15 +94,13 @@ class Catalog:
 
     def _check_schema(self, name: str) -> None:
         """Fail loudly on schema drift at first access (per process per
-        (dir, table)): one inference read of the footer, compared
-        field-for-field against the declared schema the actual read
+        (dir, table)): one inference read of the footer, compared by
+        column name against the declared schema the actual read
         applies. Same comparison as validate_schemas(), which remains
         the all-tables sweeper for tests. Only a passing check is
         remembered, so a drifted table raises on every access."""
         key = (self.sf_dir, name)
-        if key in _VALIDATED or os.environ.get(
-            "SPARK_GRAFT_SKIP_SCHEMA_VALIDATION"
-        ):
+        if key in _VALIDATED:
             return
         actual = self.spark.read.parquet(
             f"{self.sf_dir}/{name}.parquet"

@@ -13,48 +13,11 @@ alternate codec for format parity (P10).
 
 from __future__ import annotations
 
-import shutil
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Buckets for the postings sink — point lookups prune to one bucket.
 POSTINGS_BUCKETS = 8
-
-
-def drop_managed_table(spark: SparkSession, name: str) -> None:
-    """DROP TABLE IF EXISTS `name`, then remove its warehouse location:
-    an orphaned location from a previous session (in-memory catalog)
-    blocks managed-table creation under the same name."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-
-
-def retract_ids(spark: SparkSession, ids, tomb: str, key: str) -> None:
-    """Append retracted ids to the tombstone table `tomb` — the one
-    retraction mechanism of the persisted indexes (near-dup, span, ANN):
-    an O(|retractions|) append, logical immediately and physical at the
-    index's next compaction. `ids` is an iterable of ids or a DataFrame
-    with a `key` column."""
-    if isinstance(ids, DataFrame):
-        ids = ids.select(F.col(key).cast("long").alias(key))
-    else:
-        ids = spark.createDataFrame([(int(i),) for i in ids], f"{key} long")
-    ids.write.mode("append").format("parquet").saveAsTable(tomb)
-
-
-def live_table(spark: SparkSession, table: str, tomb: str, key: str) -> DataFrame:
-    """An index table minus retracted `key`s: a BROADCAST anti-join
-    against its tombstone table (map-side, so the index side keeps its
-    bucketed or partitioned layout and bucket-local joins/aggregations
-    and partition pruning survive). Reads the raw table when no
-    retraction has ever happened."""
-    df = spark.table(table)
-    if spark.catalog.tableExists(tomb):
-        df = df.join(F.broadcast(spark.table(tomb)), key, "left_anti")
-    return df
 
 
 def save_postings(postings: DataFrame, path: str) -> None:

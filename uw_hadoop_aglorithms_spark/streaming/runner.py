@@ -741,10 +741,11 @@ def stream_neardup_ingest(
     are `.distinct()`-ed before verification and hsets stayed unique.
     """
     from uw_hadoop_aglorithms_spark.operators import dedup
+    from uw_hadoop_aglorithms_spark.sources.indexes import table_name
 
     cap = dedup.BAND_BUCKET_CAP if bucket_cap is None else bucket_cap
     gated_path = pairs_path.rstrip("/") + "_gated"
-    log_table = f"{prefix}_ingest_log"
+    log_table = table_name(prefix, "ingest_log")
 
     def _ingest(batch, bid: int) -> None:
         # EVERYTHING here runs through the batch's own (cloned
@@ -768,7 +769,7 @@ def stream_neardup_ingest(
             _log_batch(s, bid)
             return
         admitted = (
-            s.table(f"{prefix}_hsets")
+            s.table(table_name(prefix, "hsets"))
             .where(F.col("doc_id") == int(first.m))
             .limit(1)
             .count()
